@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pedsnetdcc_spark.util import shuffle_partitions
+
 
 def _symmetrize(df: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Both orientations of every edge in ONE pass over ``df`` — a
@@ -83,7 +85,7 @@ def connected_components(
     # session's configured shuffle parallelism (explicit, so AQE
     # cannot coalesce it away under the small label tables and
     # re-serialize the rounds).
-    n_part = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(pairs.sparkSession)
     edges = (
         _symmetrize(pairs, src, dst)
         .repartition(n_part, "v")

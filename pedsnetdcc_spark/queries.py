@@ -706,13 +706,13 @@ def q_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The emitted era set is a pure function of the data: the final no-data
 # micro-batch advances the eviction watermark to (max start_ts − 3 days)
-# and fires the event-time timeouts, flushing exactly the eras with
+# and evicts the sessions, flushing exactly the eras with
 # era_end + gap strictly before that horizon — replayed here as the
 # SAME reference-shape era SQL the batch `eras` query proves against
 # (2*s−o=0 interleave), filtered to the horizon.  Midnight-granular
 # dates make every boundary comparison exact.
 #: Hash-ordered user cap for the streaming era proof — the stateful
-#: machinery under test (micro-batch execution, Python state, timeouts,
+#: machinery under test (micro-batch execution, session state,
 #: horizon flush) is key-count independent, and an uncapped sf0.1 run
 #: pays ~3 s of extra per-group state work to re-prove what the capped
 #: set proves; never binds at the driver's sf0.01 (150 users < 500).
@@ -763,10 +763,11 @@ _STREAM_ERA_ORACLE = (
 
 @query("streaming_interval_eras", oracle=_STREAM_ERA_ORACLE)
 def q_streaming_interval_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom stateful streaming operator under the driver hash
-    gate: interval-valued era derivation via ``applyInPandasWithState``
-    (streaming/incremental.streaming_interval_eras — event-time
-    timeouts, per-key Python state; batch twin operators/eras.py
+    """The interval-era streaming operator under the oracle hash gate:
+    interval-valued era derivation as a ``session_window`` with a
+    dynamic gap (streaming/incremental.streaming_interval_eras — one
+    JVM-native streaming aggregation whose per-event window runs to
+    that event's end + gap; batch twin operators/eras.py
     ``derive_eras``), executed as REAL micro-batches.
 
     The events table becomes day-granular intervals (sd = date(ts),
@@ -778,7 +779,7 @@ def q_streaming_interval_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     dual-watermark rule), and every second-half start lies ≥ 3 days
     above the first half's horizon, so no row is ever late-dropped.
     ``availableNow`` then runs a final no-data batch that advances the
-    watermark to (max start − 3d) and fires the timeouts, flushing
+    watermark to (max start − 3d) and evicts the sessions, flushing
     every era whose ``end + gap`` the horizon passed; eras still inside
     the horizon stay in state — not final on an unbounded stream by
     definition — and the oracle applies the identical horizon filter.

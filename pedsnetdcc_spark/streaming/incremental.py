@@ -133,112 +133,78 @@ def streaming_interval_eras(
     gap_days: int = 30,
     watermark: str = "35 days",
 ) -> DataFrame:
-    """INTERVAL-valued era derivation over a stream — the custom
-    stateful operator ``session_window`` cannot express (an event
-    contributes ``[start, end]``, not a point, so a session must stay
-    open while a long interval's end + gap is still reachable — e.g.
-    drug exposures with days-supply; batch equivalent
-    operators/eras.py:42 ``derive_eras``).
+    """INTERVAL-valued era derivation over a stream (an event contributes
+    ``[start, end]``, not a point — e.g. drug exposures with
+    days-supply; batch equivalent operators/eras.py:42 ``derive_eras``),
+    as one JVM-native ``session_window`` aggregation with a dynamic gap.
 
-    Built on ``applyInPandasWithState`` (event-time timeout):
+    Formulation: each event opens the session window ``[start + 1 µs,
+    max(end, start) + gap + 1 µs)`` — a window on ``__t = start + 1 µs``
+    whose gap is ``max(end, start) − start + gap``.  Spark merges two
+    windows when the next one starts AT OR BEFORE the current end, so
+    an event joins an era iff ``start ≤ era_end + gap`` — the inclusive
+    rule of ``derive_eras`` — and append mode evicts a session once
+    ``session_end ≤ watermark``, i.e. once ``era_end + gap <
+    watermark``: no event that could still join is in the watermark.
+    The +1 µs on both window bounds is what makes both rules exact: a
+    window on ``start`` itself would have to end at ``era_end + gap``
+    (merge) and at ``era_end + gap + 1 µs`` (eviction) at once.  The
+    aggregate reports ``min(start)``, ``max(max(end, start))`` and the
+    distinct-start count, so emitted rows equal ``derive_eras`` on the
+    same finalized prefix.  The gap is added as microseconds, so a day
+    is 86 400 s in every session timezone.  ``gap_days`` must be ≥ 1: a
+    zero gap gives a point event a zero-length window, which
+    ``session_window`` drops.
 
-    - **state** per key = the events not yet inside a watermark-final
-      era, as two epoch-nano arrays — bounded by the watermark + gap
-      horizon, NOT by stream length: once the watermark passes an era's
-      ``end + gap`` no in-watermark event can extend it, the era is
-      emitted and its events dropped from state.
-    - **each invocation** merges the new Arrow batches into state and
-      re-derives eras over the retained horizon with the exact batch
-      semantics (sort → gap-split → min start / max end / distinct-start
-      count), so emitted rows are bit-identical to ``derive_eras`` on
-      the same finalized prefix.
-    - **timeouts** flush eras whose gap horizon expires without new
-      events for the key (set to the earliest retained ``end + gap``).
+    The watermark is taken on ``__t``; it equals the one on ``start``
+    except when the latest start ends in microsecond 999 of its
+    millisecond (watermarks are millisecond-granular).  A row whose
+    start is before the watermark is late and dropped, by a watermarked
+    ``dropDuplicates`` on ``keys + __t + __e`` ahead of the
+    aggregation.  ``session_window`` alone would drop a row only once
+    its own window ends at or before the watermark, so a late row could
+    open an era overlapping one already emitted for its key.  Rows of
+    a later batch are filtered against a watermark no earlier than the
+    one that evicted an era, so a kept row starts after that era's
+    ``end + gap``; rows of the evicting batch itself merge before the
+    eviction.
+
+    State is Spark's session-window state store (sessions per key plus
+    each one's aggregation buffer) and the dedup's store (one row per
+    distinct event not yet behind the watermark), both bounded by the
+    watermark + gap horizon.  A checkpoint written by the earlier
+    ``applyInPandasWithState`` form of this operator cannot be resumed:
+    the state layout differs; start such a stream from a new checkpoint.
 
     Output (append mode): ``keys + era_start_ts, era_end_ts,
     era_count``.  Eras still inside the horizon stay in state — on an
-    unbounded stream they are not yet final by definition.
+    unbounded stream they are not yet final by definition.  A batch
+    DataFrame (``watermark=None``) yields every era.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
+    if gap_days < 1:
+        raise ValueError(f"gap_days must be >= 1, got {gap_days}")
     keys = list(keys)
-    out_schema = StructType(
-        [df.schema[k] for k in keys]
-        + [
-            StructField("era_start_ts", TimestampType()),
-            StructField("era_end_ts", TimestampType()),
-            StructField("era_count", LongType()),
-        ]
+    df = _event_time(_event_time(df, start_col), end_col)
+    s = F.col(start_col)
+    df = df.select(
+        *keys,
+        s,
+        F.greatest(F.col(end_col), s).alias("__e"),
+        (s + F.expr("INTERVAL 1 MICROSECOND")).alias("__t"),
     )
-    state_schema = StructType(
-        [
-            StructField("ev_starts", ArrayType(LongType())),
-            StructField("ev_ends", ArrayType(LongType())),
-        ]
-    )
-    gap_ns = gap_days * 86_400 * 10**9
-    gap_ms = gap_days * 86_400 * 1_000
-
-    def _ns(series: pd.Series) -> list[int]:
-        return series.values.astype("datetime64[ns]").astype("int64").tolist()
-
-    def fn(key, pdf_iter, state: GroupState):
-        starts: list[int] = []
-        ends: list[int] = []
-        if state.exists:
-            s0, e0 = state.get
-            starts, ends = list(s0), list(e0)
-        for pdf in pdf_iter:
-            if len(pdf):
-                starts.extend(_ns(pdf[start_col]))
-                ends.extend(_ns(pdf[end_col]))
-        wm_ns = state.getCurrentWatermarkMs() * 1_000_000
-        ev = sorted(zip(starts, ends))
-        eras: list[list] = []  # [start_ns, end_ns, distinct starts]
-        for s, e in ev:
-            e = max(e, s)
-            if eras and s <= eras[-1][1] + gap_ns:
-                eras[-1][1] = max(eras[-1][1], e)
-                eras[-1][2].add(s)
-            else:
-                eras.append([s, e, {s}])
-        # era ends strictly increase across a key's eras, so the
-        # finalized set is a prefix and the retained events a suffix
-        final = [er for er in eras if er[1] + gap_ns < wm_ns]
-        keep = eras[len(final):]
-        if keep:
-            cut = keep[0][0]
-            pairs = [(s, e) for s, e in ev if s >= cut]
-            state.update(
-                ([s for s, _ in pairs], [e for _, e in pairs])
-            )
-            state.setTimeoutTimestamp(
-                max(keep[0][1] // 10**6 + gap_ms + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.remove()
-        if final:
-            yield pd.DataFrame(
-                [
-                    tuple(key) + (pd.Timestamp(er[0]), pd.Timestamp(er[1]), len(er[2]))
-                    for er in final
-                ],
-                columns=keys + ["era_start_ts", "era_end_ts", "era_count"],
-            )
-
-    df = _event_time(df, start_col)
-    src = df.withWatermark(start_col, watermark) if watermark else df
-    return src.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    if watermark:
+        # the watermarked dedup drops rows whose start is behind the
+        # watermark; min, max and the distinct-start count ignore
+        # duplicates, so it changes no output
+        df = df.withWatermark("__t", watermark).dropDuplicates([*keys, "__t", "__e"])
+    gap_us = F.unix_micros("__e") - F.unix_micros(s) + gap_days * 86_400 * 10**6
+    z = F.lit(0)
+    gap = F.make_interval(z, z, z, z, z, z, gap_us.cast("decimal(18,0)") / 10**6)
+    return df.groupBy(*keys, F.session_window("__t", gap)).agg(
+        F.min(s).alias("era_start_ts"),
+        F.max("__e").alias("era_end_ts"),
+        F.size(F.collect_set(s)).cast("long").alias("era_count"),
+    ).drop("session_window")
 
 
 def streaming_eras(
@@ -254,9 +220,8 @@ def streaming_eras(
 
     For instantaneous events this matches the batch era operator with a
     zero-duration end date; interval-valued events (end dates, days
-    supply) still need the batch window formulation
-    (operators/eras.py), which streaming can host via
-    ``applyInPandasWithState`` if ever needed.
+    supply) go through ``streaming_interval_eras``, whose gap is
+    dynamic per event.
     """
     df = _event_time(df, ts_col)
     src = df.withWatermark(ts_col, watermark) if watermark else df

@@ -104,18 +104,21 @@ def repartition_by_key(df: DataFrame, *cols, num_partitions: int | None = None) 
     already sizes both to the fleet.  A non-numeric
     ``spark.sql.shuffle.partitions`` (e.g. an auto-tuning platform
     value) degrades to default parallelism alone."""
-    sc = df.sparkSession.sparkContext
-    if num_partitions:
-        n = num_partitions
-    else:
-        try:
-            shuffle_n = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            shuffle_n = 0
-        n = max(shuffle_n, sc.defaultParallelism)
+    n = num_partitions or max(
+        shuffle_partitions(df.sparkSession),
+        df.sparkSession.sparkContext.defaultParallelism,
+    )
     return df.repartition(n, *cols)
+
+
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int; a
+    non-integer value (``auto`` on auto-tuning platforms) falls back to
+    the context's default parallelism."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
 
 
 def salted_join(

@@ -51,14 +51,18 @@ def _arm(query: str, envvar: str, value: str, repo: str):
         capture_output=True, text=True, timeout=900, env=env,
     )
     steal = _steal_pct(t0, _cpu_ticks())
-    sec = None
-    for line in reversed(proc.stdout.strip().splitlines() or [""]):
+    return _last_sec(proc.stdout), steal
+
+
+def _last_sec(stdout: str) -> float | None:
+    """``sec`` of the last stdout line that is a JSON object carrying
+    one; other lines (log text, JSON arrays or scalars) are skipped."""
+    for line in reversed(stdout.strip().splitlines()):
         try:
-            sec = float(json.loads(line)["sec"])
-            break
-        except (ValueError, KeyError, json.JSONDecodeError):
+            return float(json.loads(line)["sec"])
+        except (ValueError, KeyError, TypeError):
             continue
-    return sec, steal
+    return None
 
 
 def main() -> None:

@@ -81,3 +81,28 @@ def test_connected_components_string_ids_long_chain(spark):
 def test_connected_components_empty_pairs(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(pairs).collect() == []
+
+
+
+def test_connected_components_shuffle_partitions_auto(spark, monkeypatch):
+    """``spark.sql.shuffle.partitions=auto`` (the auto-tuning value some
+    platforms accept; open-source Spark rejects it at ``conf.set``, so
+    the read is patched) falls back to default parallelism instead of
+    raising."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from pedsnetdcc_spark.util import shuffle_partitions
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "auto"
+    assert shuffle_partitions(spark) == spark.sparkContext.defaultParallelism
+    pairs = spark.createDataFrame([(1, 2), (3, 2), (5, 6)], "id_a long, id_b long")
+    got = {r.node: r.component for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}

@@ -118,10 +118,10 @@ def test_streaming_eras_sessionization(spark, stream_src, sf_dir):
 
 
 def test_streaming_interval_eras_stateful_exact(spark):
-    """applyInPandasWithState interval-era operator on a fully
-    controlled dataset: exact expected emission set, including merge
-    across overlapping intervals, distinct-start counting, watermark
-    finalization, and the still-open era staying in state."""
+    """Interval-era operator on a fully controlled dataset: exact
+    expected emission set, including merge across overlapping
+    intervals, distinct-start counting, watermark finalization, and the
+    still-open era staying in state."""
     import datetime as dt
     import shutil
     import tempfile
@@ -166,13 +166,153 @@ def test_streaming_interval_eras_stateful_exact(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_streaming_interval_eras_exact_boundaries(spark):
+    """Microsecond boundaries of the session-window formulation, as a
+    stream: a start exactly at ``era_end + gap`` merges, one at
+    ``era_end + gap + 1 µs`` opens a new era, ``end < start`` clamps to
+    ``start``, duplicate starts count once, and an era whose ``end +
+    gap`` equals the final watermark stays in state."""
+    import datetime as dt
+
+    from pedsnetdcc_spark.streaming.incremental import streaming_interval_eras
+
+    D = dt.datetime
+    us = dt.timedelta(microseconds=1)
+    rows = [
+        (1, D(2024, 1, 1), D(2024, 1, 3)),       # Jan 3 + 7d = Jan 10:
+        (1, D(2024, 1, 10), D(2024, 1, 11)),     #   merges
+        (2, D(2024, 1, 1), D(2024, 1, 3)),
+        (2, D(2024, 1, 10) + us, D(2024, 1, 11)),  # 1 µs past: new era
+        (3, D(2024, 1, 5), D(2024, 1, 2)),       # end < start: clamps
+        (4, D(2024, 1, 1), D(2024, 1, 2)),       # same start twice:
+        (4, D(2024, 1, 1), D(2024, 1, 4)),       #   counted once
+        (5, D(2024, 5, 20), D(2024, 5, 23)),     # May 23 + 7d = watermark
+        (6, D(2024, 5, 20), D(2024, 5, 23) - us),  # 1 µs inside it
+        (9, D(2024, 6, 1), D(2024, 6, 1)),       # watermark = May 30
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, start_ts timestamp, end_ts timestamp"
+    )
+    d = tempfile.mkdtemp()
+    try:
+        df.write.mode("overwrite").parquet(d + "/iv")
+        stream = spark.readStream.schema(df.schema).parquet(d + "/iv")
+        out = _run_stream(
+            spark,
+            streaming_interval_eras(
+                stream, ["user_id"], "start_ts", "end_ts",
+                gap_days=7, watermark="2 days",
+            ),
+            "append",
+            "t_interval_eras_boundaries",
+        )
+        got = sorted(map(tuple, out.collect()))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    assert got == [
+        (1, D(2024, 1, 1), D(2024, 1, 11), 2),
+        (2, D(2024, 1, 1), D(2024, 1, 3), 1),
+        (2, D(2024, 1, 10) + us, D(2024, 1, 11), 1),
+        (3, D(2024, 1, 5), D(2024, 1, 5), 1),
+        (4, D(2024, 1, 1), D(2024, 1, 4), 1),
+        (6, D(2024, 5, 20), D(2024, 5, 23) - us, 1),
+    ], got
+
+
+def test_streaming_interval_eras_late_rows(spark):
+    """A row whose start is behind the watermark is dropped, even when
+    its own window would still reach past it — otherwise it could open
+    an era overlapping one already emitted.  Three in-order
+    micro-batches: after the first, the watermark is Feb 28 (Mar 1 −
+    2d), so the second batch emits key 1's era [Jan 1, Jan 10]; in the
+    third, (1, Jan 5, Mar 20) would overlap it and is dropped, a start
+    1 µs before the watermark is dropped, one exactly at it is kept."""
+    import datetime as dt
+    import glob
+    import os
+
+    from pedsnetdcc_spark.streaming.incremental import streaming_interval_eras
+
+    D = dt.datetime
+    us = dt.timedelta(microseconds=1)
+    schema = "user_id long, start_ts timestamp, end_ts timestamp"
+    batches = [
+        [(1, D(2024, 1, 1), D(2024, 1, 10)), (9, D(2024, 3, 1), D(2024, 3, 1))],
+        [(8, D(2024, 3, 1), D(2024, 3, 1))],
+        [
+            (1, D(2024, 1, 5), D(2024, 3, 20)),  # overlaps the emitted era
+            (2, D(2024, 2, 28), D(2024, 2, 29)),  # at the watermark: kept
+            (3, D(2024, 2, 28) - us, D(2024, 3, 10)),  # 1 µs behind: dropped
+            (9, D(2024, 6, 1), D(2024, 6, 1)),
+        ],
+    ]
+    root = tempfile.mkdtemp()
+    try:
+        os.makedirs(f"{root}/src")
+        for i, rows in enumerate(batches):
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{root}/b{i}")
+            (part,) = glob.glob(f"{root}/b{i}/part-*.parquet")
+            dest = f"{root}/src/b{i}.parquet"
+            os.rename(part, dest)
+            os.utime(dest, (1_700_000_000 + i * 100,) * 2)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{root}/src")
+        )
+        out = _run_stream(
+            spark,
+            streaming_interval_eras(
+                stream, ["user_id"], "start_ts", "end_ts",
+                gap_days=7, watermark="2 days",
+            ),
+            "append",
+            "t_interval_eras_late",
+        )
+        got = sorted(map(tuple, out.collect()))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert got == [
+        (1, D(2024, 1, 1), D(2024, 1, 10), 1),
+        (2, D(2024, 2, 28), D(2024, 2, 29), 1),
+        (8, D(2024, 3, 1), D(2024, 3, 1), 1),
+        (9, D(2024, 3, 1), D(2024, 3, 1), 1),
+    ], got
+
+
+def _reference_interval_eras(ev, span, gap):
+    """Every era of the ``[ts, ts + span]`` intervals per user with the
+    inclusive gap rule of ``derive_eras``, in plain Python, plus the
+    latest ``ts``."""
+    from collections import defaultdict
+
+    per_user = defaultdict(list)
+    for r in ev:
+        per_user[r["user_id"]].append(r["ts"])
+    all_eras = set()
+    for uid, tss in per_user.items():
+        tss.sort()
+        cur = None
+        for ts in tss:
+            s, e = ts, ts + span
+            if cur is not None and s <= cur[1] + gap:
+                cur[1] = max(cur[1], e)
+                cur[2].add(s)
+            else:
+                if cur is not None:
+                    all_eras.add((uid, cur[0], cur[1], len(cur[2])))
+                cur = [s, e, {s}]
+        if cur is not None:
+            all_eras.add((uid, cur[0], cur[1], len(cur[2])))
+    return all_eras, max(r["ts"] for r in ev)
+
+
 def test_streaming_interval_eras_matches_python_reference(spark, stream_src, sf_dir):
     """Real event volume with genuine intervals (end = ts + 3 days,
     gap 2 days): every emitted era must exactly match an independently
     computed batch reference, and finalization must track the watermark
     (margin-safe on the boundary)."""
     import datetime as dt
-    from collections import defaultdict
 
     from pedsnetdcc_spark.streaming.incremental import streaming_interval_eras
 
@@ -194,29 +334,8 @@ def test_streaming_interval_eras_matches_python_reference(spark, stream_src, sf_
     got = set(map(tuple, out.collect()))
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts").collect()
-    per_user = defaultdict(list)
-    max_ts = None
-    for r in ev:
-        ts = r["ts"]
-        per_user[r["user_id"]].append(ts)
-        max_ts = ts if max_ts is None or ts > max_ts else max_ts
     gap = dt.timedelta(days=2)
-    span = dt.timedelta(days=3)
-    all_eras = set()
-    for uid, tss in per_user.items():
-        tss.sort()
-        cur = None
-        for ts in tss:
-            s, e = ts, ts + span
-            if cur is not None and s <= cur[1] + gap:
-                cur[1] = max(cur[1], e)
-                cur[2].add(s)
-            else:
-                if cur is not None:
-                    all_eras.add((uid, cur[0], cur[1], len(cur[2])))
-                cur = [s, e, {s}]
-        if cur is not None:
-            all_eras.add((uid, cur[0], cur[1], len(cur[2])))
+    all_eras, max_ts = _reference_interval_eras(ev, dt.timedelta(days=3), gap)
     wm = max_ts - dt.timedelta(seconds=1)
     margin = dt.timedelta(hours=1)
 
@@ -225,6 +344,32 @@ def test_streaming_interval_eras_matches_python_reference(spark, stream_src, sf_
     assert must_emit <= got, list(must_emit - got)[:3]
     for er in got:
         assert er[2] + gap < wm + margin  # nothing beyond the horizon emitted
+
+
+def test_streaming_interval_eras_batch_input(spark, sf_dir):
+    """On a batch DataFrame (no watermark) the same operator yields the
+    full era set of the Python reference — nothing is held back."""
+    import datetime as dt
+
+    from pedsnetdcc_spark.streaming.incremental import streaming_interval_eras
+
+    ev = read_table(spark, sf_dir, "events")
+    df = ev.select(
+        "user_id",
+        F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 3 DAYS")).alias("end_ts"),
+    )
+    out = streaming_interval_eras(
+        df, ["user_id"], "start_ts", "end_ts", gap_days=2, watermark=None
+    )
+    expected, _ = _reference_interval_eras(
+        ev.select("user_id", "ts").collect(),
+        dt.timedelta(days=3),
+        dt.timedelta(days=2),
+    )
+    got = list(map(tuple, out.collect()))
+    assert len(got) == len(expected)
+    assert set(got) == expected
 
 
 def test_streaming_interval_eras_checkpoint_restart(spark):
