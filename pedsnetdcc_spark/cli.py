@@ -142,6 +142,7 @@ def cmd_drug_era(args: argparse.Namespace) -> int:
 
 def cmd_sync_observation_period(args: argparse.Namespace) -> int:
     from pedsnetdcc_spark.cdm import OBS_PERIOD_DOMAINS, derive_observation_period
+    from pedsnetdcc_spark.util import release_cached
 
     spark = _session(args)
     present = {
@@ -149,9 +150,9 @@ def cmd_sync_observation_period(args: argparse.Namespace) -> int:
         for n in OBS_PERIOD_DOMAINS
         if n in _tables_in(args.input)
     }
-    _publish(
-        spark, args.output, {"observation_period": derive_observation_period(present)}
-    )
+    period = derive_observation_period(present)
+    _publish(spark, args.output, {"observation_period": period})
+    release_cached(period)  # the id assigner's cached relation
     return 0
 
 

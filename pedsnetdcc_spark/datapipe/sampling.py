@@ -234,12 +234,14 @@ def global_shuffle(
     order.  Same seed → same permutation on any cluster; a new seed is
     a fresh epoch-level shuffle.
 
-    ``mode="distributed"`` (default) computes the rank without a global
-    sort task: range-partition on the hash, count per partition, then
-    per-partition row_number + broadcast prefix offsets — the same
-    prefix-sum scheme as ``ids.assign_surrogate_ids`` (the 100 TB
-    path).  ``mode="window"`` is the single-task global window kept for
-    plan parity in tests.
+    ``mode="distributed"`` (default) is ``ids.assign_surrogate_ids``'
+    distributed mode on the hash (the 100 TB path): range-partition on
+    the hash, each row's position in its sorted partition plus a
+    broadcast prefix offset of the per-partition counts, with no global
+    sort task and no job at plan-build time.  Its result reads a cached
+    relation the caller releases after its action
+    (``util.release_cached``).  ``mode="window"`` is the single-task
+    global window kept for plan parity in tests.
     """
     from pedsnetdcc_spark.operators.ids import assign_surrogate_ids
 

@@ -1100,10 +1100,12 @@ class IvfIndexHandle:
         _recover_ivf_compaction(path, recover=recover)
         self.cells = spark.read.parquet(_os.path.join(path, "cells"))
         delta = _os.path.join(path, "cells_delta")
-        if _os.path.isdir(delta):
+        if _committed_epochs(delta):
             # streaming appends (stream_ivf_index_append): union the
             # epoch deltas in; the centroid_id filter pushes through
-            # the union, so BOTH sides stay partition-pruned
+            # the union, so BOTH sides stay partition-pruned.  A delta
+            # holding only a crashed batch's orphan temp is skipped:
+            # schema inference fails on a directory with no epoch.
             self.cells = self.cells.unionByName(
                 spark.read.parquet(delta).drop("epoch")
             )
@@ -1571,11 +1573,7 @@ def _compact_ivf_index_locked(spark, path: str) -> dict:
     _recover_ivf_compaction(path)
     cells_dir = _os.path.join(path, "cells")
     delta_dir = _os.path.join(path, "cells_delta")
-    epochs = (
-        [e for e in _os.listdir(delta_dir) if e.startswith("epoch=")]
-        if _os.path.isdir(delta_dir)
-        else []
-    )
+    epochs = _committed_epochs(delta_dir)
     if not epochs:
         return {"cells": None, "rows": None, "epochs_folded": 0}
     base = spark.read.parquet(cells_dir)
@@ -1595,7 +1593,7 @@ def _compact_ivf_index_locked(spark, path: str) -> dict:
     # is skipped while its rows still live in the delta — still
     # exactly once.  After the swap the folded rows live in the base
     # and the watermark keeps the replay out.
-    max_folded = max(int(e.split("=", 1)[1]) for e in epochs)
+    max_folded = max(epochs)
     meta_path = _os.path.join(path, "meta.json")
     with open(meta_path) as f:
         meta = _json.load(f)
@@ -1661,11 +1659,7 @@ def maybe_compact_ivf_index(
     from pedsnetdcc_spark.datapipe.dedup import _dir_bytes
 
     delta = _os.path.join(path, "cells_delta")
-    epochs = (
-        [e for e in _os.listdir(delta) if e.startswith("epoch=")]
-        if _os.path.isdir(delta)
-        else []
-    )
+    epochs = _committed_epochs(delta)
     reason = None
     if max_epochs is not None and len(epochs) > max_epochs:
         reason = f"epochs {len(epochs)} > {max_epochs}"
@@ -1699,14 +1693,18 @@ def next_epoch_offset(path: str) -> int:
 
     with open(_os.path.join(path, "meta.json")) as f:
         folded = _json.load(f).get("folded_through_epoch", -1)
-    delta = _os.path.join(path, "cells_delta")
-    existing = (
-        [int(e.split("=", 1)[1]) for e in _os.listdir(delta)
-         if e.startswith("epoch=")]
-        if _os.path.isdir(delta)
-        else []
-    )
-    return max([folded, *existing]) + 1
+    return max([folded, *_committed_epochs(_os.path.join(path, "cells_delta"))]) + 1
+
+
+def _committed_epochs(delta: str) -> list[int]:
+    """Epoch ids committed under an IVF index's ``cells_delta`` (its
+    ``epoch=*`` children; an in-flight or orphaned ``.tmp-epoch-*`` is
+    not one)."""
+    import os as _os
+
+    if not _os.path.isdir(delta):
+        return []
+    return [int(e.split("=", 1)[1]) for e in _os.listdir(delta) if e.startswith("epoch=")]
 
 
 def _validate_lineage_offset(path: str, checkpoint: str,

@@ -10,7 +10,9 @@ anti-join (the same probe shape as check_fact_relationship).
 
 Each check returns a small violations DataFrame (empty = constraint
 holds) so callers can assert, quarantine, or log; `validate_table`
-runs a TableSchema's full constraint set in one pass over the data.
+runs a TableSchema's full constraint set: its PK and every NOT NULL
+column in one pass over the data (`key_and_null_counts`), then one
+anti-join per foreign key.
 
 Index DDL is a deliberate no-op in Spark (full-scan engine, SURVEY.md
 §4); the reference's index column lists serve instead as clustering
@@ -78,25 +80,54 @@ def fk_violations(
     )
 
 
-def validate_table(
-    df: DataFrame,
-    schema,  # TableSchema
-    refs: dict[str, DataFrame] | None = None,
-) -> dict[str, int]:
-    """Run a TableSchema's declared constraints; returns violation
-    counts keyed by constraint name (empty dict values of 0 = clean)."""
-    out: dict[str, int] = {}
-    if schema.primary_key:
-        out["pk:" + ",".join(schema.primary_key)] = pk_violations(
-            df, schema.primary_key
-        ).count()
+def key_and_null_counts(df: DataFrame, schema) -> dict[str, int]:
+    """PK-duplicate groups and every NOT NULL count of a TableSchema in
+    ONE action: a two-level aggregate (per-key row and null counts, then
+    their totals) instead of a PK count plus a NOT NULL collect.  The
+    values are exactly what :func:`pk_violations` (as a count) and
+    :func:`not_null_violation_counts` give."""
+    key = list(schema.primary_key)
     nn_cols = [f.name for f in schema.struct.fields if not f.nullable and f.name in df.columns]
-    if nn_cols:
-        for row in not_null_violation_counts(df, nn_cols).collect():
-            out[f"notnull:{row['column']}"] = row["null_count"]
+    if not key and not nn_cols:
+        return {}
+    nulls = [
+        F.count(F.when(F.col(c).isNull(), 1)).alias(f"__null{i}") for i, c in enumerate(nn_cols)
+    ]
+    if key:
+        per_key = df.groupBy(*key).agg(F.count(F.lit(1)).alias("__cnt"), *nulls)
+        row = per_key.agg(
+            F.count(F.when(F.col("__cnt") > 1, 1)),
+            *[F.coalesce(F.sum(f"__null{i}"), F.lit(0)) for i in range(len(nn_cols))],
+        ).first()
+        out = {"pk:" + ",".join(key): row[0]}
+        null_counts = row[1:]
+    else:
+        out, null_counts = {}, df.agg(*nulls).first()
+    out.update({f"notnull:{c}": n for c, n in zip(nn_cols, null_counts)})
+    return out
+
+
+def fk_violation_counts(
+    df: DataFrame, schema, refs: dict[str, DataFrame] | None
+) -> dict[str, int]:
+    """Dangling-reference counts for each of a TableSchema's foreign
+    keys whose referenced table is in ``refs`` (one anti-join each)."""
+    out: dict[str, int] = {}
     for fk_col, ref_table, ref_col in schema.foreign_keys:
         if refs and ref_table in refs and fk_col in df.columns:
             out[f"fk:{fk_col}->{ref_table}.{ref_col}"] = fk_violations(
                 df, fk_col, refs[ref_table], ref_col
             ).count()
     return out
+
+
+def validate_table(
+    df: DataFrame,
+    schema,  # TableSchema
+    refs: dict[str, DataFrame] | None = None,
+) -> dict[str, int]:
+    """Run a TableSchema's declared constraints; returns violation
+    counts keyed by constraint name (empty dict values of 0 = clean):
+    the PK and NOT NULL counts from one pass, then one anti-join per
+    foreign key whose table is in ``refs``."""
+    return {**key_and_null_counts(df, schema), **fk_violation_counts(df, schema, refs)}

@@ -24,11 +24,13 @@ Delta table transaction).  Assignment offers two modes:
   bit-identical to the reference, but a global window is a single-task
   sort — fine for the *new-rows-only* slice it is applied to (only
   unmapped rows are numbered), not for bulk backfills.
-- ``distributed`` — range-partition by the order column, count rows per
-  partition (tiny collect), then number within partitions and add the
-  exclusive-prefix-sum offset: contiguous, deterministic, and parallel —
-  the 100 TB path (equivalent to RDD ``zipWithIndex`` but staying in the
-  DataFrame API / Arrow pipeline).
+- ``distributed`` — range-partition by the order column, sort within
+  partitions and cache each row's position in its partition; count rows
+  per partition and turn the counts into exclusive-prefix-sum offsets
+  with a broadcast self-join, all inside the one plan (no driver
+  collect): contiguous, deterministic, and parallel — the 100 TB path
+  (equivalent to RDD ``zipWithIndex`` but staying in the DataFrame API /
+  Arrow pipeline).
 """
 
 from __future__ import annotations
@@ -110,6 +112,14 @@ def assign_surrogate_ids(
     """Append a contiguous surrogate id column ``base+1 … base+count``
     ordered by ``order_col`` — one column or a composite key
     (id_mapping_transform.py:28-31).
+
+    ``mode="distributed"`` runs no job while the plan is built.  Its
+    result reads a cached relation (the range-partitioned input with
+    each row's partition and position), which must stay cached until
+    the caller's action on the result has run; the caller releases it
+    afterwards (``util.release_cached(result)``).  Rows with equal
+    order keys get their ids in an arbitrary order, as in ``window``
+    mode.
     """
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     if mode == "window":
@@ -119,33 +129,36 @@ def assign_surrogate_ids(
         raise ValueError(f"unknown mode {mode!r}")
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    pid = F.spark_partition_id()
+    # monotonically_increasing_id() is (partition index << 33) + row
+    # index, so subtracting the partition's base leaves each row's
+    # 0-based position in the sorted partition
     ranged = (
         df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__pid", pid)
+        .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33))
     )
-    # Pin partition ids so the count job and the numbering job see the
-    # identical assignment (range sampling is deterministic per-plan, but
-    # caching removes any doubt and avoids recomputing the input twice).
+    # Load-bearing: the count branch and the id branch below must read
+    # ONE materialization.  Uncached, each branch runs its own range
+    # exchange, whose sampled bounds can differ, and ids go wrong.
     ranged = ranged.cache()
-    counts = {r["__pid"]: r["cnt"] for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = {}, base
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "__pid int, __offset long"
-        )
+    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
+    # exclusive prefix sum from a broadcast self-join of the ≤ n_parts-row
+    # count table (a global window here would be a single-task
+    # exchange); both sides are the same aggregate, so it runs once
+    upto = counts.select(F.col("__pid").alias("__upto"), F.col("__cnt").alias("__n"))
+    offsets = (
+        counts.join(F.broadcast(upto), F.col("__upto") <= F.col("__pid"))
+        .groupBy("__pid", "__cnt")
+        .agg((F.sum("__n") - F.col("__cnt")).alias("__offset"))
+        .drop("__cnt")
     )
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (
-        ranged.join(off_df, "__pid")
-        .withColumn(id_name, F.row_number().over(w) + F.col("__offset"))
-        .drop("__pid", "__offset")
+    return (
+        ranged.join(F.broadcast(offsets), "__pid")
+        .withColumn(id_name, F.col("__pos") + F.col("__offset") + F.lit(base + 1))
+        .drop("__pid", "__pos", "__offset")
     )
-    return out
 
 
 def build_id_map(

@@ -9,18 +9,24 @@ atomically swap the transformed schema into place (keeping a backup for
 
 Spark shape: per-table jobs submitted concurrently from the driver
 (the scheduler interleaves their stages), each job = compose the
-DataFrame chain → stage parquet; then one atomic ``publish``.
-Constraint DDL becomes a validation report (operators/constraints.py).
+DataFrame chain → stage parquet → validate the staged files; then one
+atomic ``publish``.  Constraint DDL becomes a validation report
+(operators/constraints.py): each table's PK and NOT NULL counts come
+from one aggregate over its staged files, inside that table's job and
+before publish; foreign keys between tables of this build are probed
+after publish, against the published tables.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pedsnetdcc_spark.cdm import transform_cdm_table
-from pedsnetdcc_spark.operators.constraints import validate_table
+from pedsnetdcc_spark.operators.constraints import fk_violation_counts, key_and_null_counts
 from pedsnetdcc_spark.plans.pipeline import Job, check_jobs, run_parallel
 from pedsnetdcc_spark.schema_registry import VOCAB_TABLES, stock_schemas
 from pedsnetdcc_spark.sources.clustering import CLUSTER_SPECS
@@ -52,18 +58,28 @@ def run_transformation(
     load.  Pass ``cluster_specs={}`` to disable.
 
     Returns the per-table constraint-validation report (empty when
-    ``validate=False``).  The prior generation stays in ``_backup`` —
+    ``validate=False``): PK and NOT NULL counts for every table with a
+    stock schema, plus an FK count for each foreign key whose
+    referenced table is also in this build (the published tables are
+    read only for those).  The prior generation stays in ``_backup`` —
     ``store.undo()`` is the reference's ``undo`` command.
     """
     specs = CLUSTER_SPECS if cluster_specs is None else cluster_specs
     work = {n: df for n, df in tables.items() if n not in VOCAB_TABLES}
+    schemas = stock_schemas(model_version) if validate else {}
 
     def build(name: str, df: DataFrame) -> Callable[[], object]:
         def job():
             out = transform(df, name, person, concept, site)
             spec = [c for c in specs.get(name, []) if c in out.columns]
             store.stage(out, name, cluster_by=spec or None, cluster_files=cluster_files)
-            return out
+            if name not in schemas:
+                return None
+            # read back with the known schema: no inference job
+            staged = spark.read.schema(out.schema).parquet(
+                os.path.join(store.staging_dir, name)
+            )
+            return out.columns, key_and_null_counts(staged, schemas[name])
 
         return job
 
@@ -73,12 +89,17 @@ def run_transformation(
     store.publish()
 
     report: dict[str, dict[str, int]] = {}
-    if validate:
-        schemas = stock_schemas(model_version)
-        published = {n: store.read(spark, n) for n in work}
-        for name in work:
-            if name in schemas:
-                report[name] = validate_table(
-                    published[name], schemas[name], refs=published
-                )
+    published = functools.cache(lambda n: store.read(spark, n))
+    results = {j.name: j.result for j in done}
+    for name in work:
+        if results[name] is None:
+            continue
+        columns, report[name] = results[name]
+        refs = {
+            ref: published(ref)
+            for fk, ref, _ in schemas[name].foreign_keys
+            if ref in work and fk in columns
+        }
+        if refs:
+            report[name].update(fk_violation_counts(published(name), schemas[name], refs))
     return report

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,7 +83,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def read_tables(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
+    """:func:`read_table` for each of ``names``, resolved concurrently:
+    each ``spark.read.parquet`` blocks on its own schema-inference job,
+    so one driver thread would wait out those jobs one after another.
+    The pool is no larger than ``len(names)`` or the default
+    parallelism."""
+    workers = max(1, min(len(names), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        return dict(zip(names, pool.map(lambda n: read_table(spark, sf_dir, n), names)))
 
 
 def delete_rows(df: DataFrame, condition) -> DataFrame:

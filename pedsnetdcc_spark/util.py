@@ -121,6 +121,22 @@ def shuffle_partitions(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def release_cached(df: DataFrame) -> None:
+    """Uncache every cached relation that ``df``'s plan reads — for a
+    result whose operator cached an intermediate it holds no handle to
+    (e.g. ``ids.assign_surrogate_ids(mode="distributed")``).  Call it
+    after the last action on ``df``: a later action recomputes the
+    released relations."""
+    spark = df.sparkSession._jsparkSession
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "InMemoryRelation":
+            spark.sharedState().cacheManager().uncacheQuery(
+                spark, leaf.cacheBuilder().logicalPlan(), False, True
+            )
+
+
 def salted_join(
     left: "DataFrame",
     right: "DataFrame",

@@ -76,6 +76,22 @@ def test_cli_merge_and_condition_era(spark, namespace, tmp_path, capsys):
     assert rows[(1, 10)] == 2 and rows[(2, 11)] == 1
 
 
+def test_cli_sync_observation_period_releases_cache(spark, namespace, tmp_path):
+    """The verb publishes one period per person and leaves none of the
+    id assigner's cached relations persisted."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = str(tmp_path / "obs")
+    assert main(["sync-observation-period", "-i", namespace, "-o", out]) == 0
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+    got = spark.read.parquet(os.path.join(out, "current", "observation_period"))
+    rows = sorted(
+        (r["person_id"], r["observation_period_id"], str(r["observation_period_end_date"]))
+        for r in got.collect()
+    )
+    assert rows == [(1, 1, "2020-01-21 00:00:00"), (2, 2, "2020-03-01 00:00:00")]
+
+
 def test_cli_subset_and_integrity(spark, namespace, tmp_path, capsys):
     cdir = str(tmp_path / "cohorts")
     spark.createDataFrame([(1,)], "person_id long").write.parquet(

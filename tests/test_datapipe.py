@@ -3182,6 +3182,29 @@ def test_ivf_readonly_recover_false_raises(spark, emb, tmp_path):
     assert os.path.isdir(f"{root}/cells")
 
 
+def test_ivf_open_ignores_delta_with_only_orphan_temp(spark, emb, tmp_path):
+    """A crash inside an epoch commit can leave ``cells_delta`` holding
+    only a ``.tmp-epoch-*`` directory.  Opening the index must not
+    union that delta in (schema inference fails on a directory with no
+    committed epoch) and must answer from the base cells."""
+    import os
+
+    from pedsnetdcc_spark.datapipe.similarity import (
+        build_ivf_index,
+        next_epoch_offset,
+        open_ivf_index,
+    )
+
+    root = str(tmp_path / "ivf_orphan")
+    build_ivf_index(emb, root, n_centroids=8, assign="flat", seed=3)
+    orphan = f"{root}/cells_delta/.tmp-epoch-000000"
+    os.makedirs(orphan)
+    open(f"{orphan}/_SUCCESS", "w").close()
+    handle = open_ivf_index(spark, root)
+    assert handle.cells.count() == emb.count()
+    assert next_epoch_offset(root) == 0
+
+
 @pytest.mark.parametrize("crash_point", ["after_tmp", "after_keys_aside",
                                          "after_both_aside"])
 @pytest.mark.parametrize("next_op", ["read", "append", "compact"])

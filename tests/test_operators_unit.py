@@ -36,6 +36,24 @@ def test_distributed_ids_match_window_ids(spark, sf_dir):
     assert sorted(ids) == list(range(101, 101 + len(ids)))  # contiguous from base
 
 
+def test_distributed_ids_match_window_on_aggregated_composite_key(spark):
+    """An aggregated input over many partitions (a groupBy over
+    repartition(17)) with a composite key: its count and id branches
+    must number one materialization of the range exchange, so the
+    distributed ids equal the window ids row for row."""
+    src = (
+        spark.range(6000)
+        .withColumn("a", (F.col("id") * 7919) % 401)
+        .withColumn("b", F.col("id") % 7)
+    )
+    agg = src.repartition(17).groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
+    w = assign_surrogate_ids(agg, "id", ["a", "b"], base=-5, mode="window")
+    d = assign_surrogate_ids(agg, "id", ["a", "b"], base=-5, mode="distributed", num_partitions=9)
+    want = sorted(map(tuple, w.collect()))
+    assert sorted(map(tuple, d.collect())) == want
+    assert [r[3] for r in want] == list(range(-4, -4 + len(want)))
+
+
 def test_allocator_reserve_and_seed(tmp_path):
     a = IdAllocator(str(tmp_path / "state.json"))
     assert a.reserve("t", 10) == 0

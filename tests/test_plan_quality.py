@@ -257,6 +257,26 @@ def test_global_shuffle_has_no_single_partition_window(spark, sf_dir):
     assert "Exchange SinglePartition" not in plan, plan
 
 
+def test_distributed_ids_one_range_exchange_no_pid_window(spark, sf_dir):
+    """The distributed id plan sorts the input once: exactly one range
+    exchange (the cached relation prints once per scan, so exchanges
+    are counted by plan id), and ids come from cached positions plus
+    broadcast offsets, not a window partitioned by partition id."""
+    import re
+
+    from pedsnetdcc_spark.operators.ids import assign_surrogate_ids
+
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    out = assign_surrogate_ids(
+        cust, "sid", ["c_nationkey", "c_custkey"], mode="distributed", num_partitions=5
+    )
+    plan = _plan(out)
+    ranges = set(re.findall(r"Exchange rangepartitioning\(.*\[plan_id=(\d+)\]", plan))
+    assert len(ranges) == 1, plan
+    assert not [ln for ln in plan.splitlines() if "Window" in ln and "__pid" in ln], plan
+    assert "Exchange SinglePartition" not in plan, plan
+
+
 def test_subset_polymorphic_scans_fact_table_once(spark, sf_dir):
     """The polymorphic EXISTS subset must read the fact input ONCE: the
     per-domain key sets are unioned and probed with a single
@@ -274,13 +294,21 @@ def test_pure_plan_builders_run_no_jobs(spark, sf_dir):
     plan-build time (e.g. a .first() probing a signature length) runs
     the whole upstream pipeline before the real job — invisible at test
     scale, a doubled multi-hour stage at 100 TB.  Excluded by design:
-    the distributed prefix-sum id assigner (and global_shuffle over it)
-    and TableStore-backed queries, which materialize counts/stage
-    tables as part of their contract."""
+    TableStore-backed queries, which materialize counts/stage tables as
+    part of their contract."""
+    import datetime as dt
+
+    from pedsnetdcc_spark.cdm import derive_observation_period
     from pedsnetdcc_spark.datapipe import dedup, sampling, text
+    from pedsnetdcc_spark.operators.ids import assign_surrogate_ids
     from pedsnetdcc_spark.sources.io import read_table as rt
+    from pedsnetdcc_spark.util import release_cached
 
     docs = rt(spark, sf_dir, "documents")
+    visits = spark.createDataFrame(
+        [(1, dt.date(2020, 1, 1), dt.date(2020, 1, 3))],
+        "person_id long, visit_start_date date, visit_end_date date",
+    )
     sc = spark.sparkContext
     group = "plan-build-guard"
     sc.setJobGroup(group, "plan building must not run jobs")
@@ -300,6 +328,11 @@ def test_pure_plan_builders_run_no_jobs(spark, sf_dir):
         ntok = docs.withColumn("ntok", F.size(F.split(F.col("text"), " ")))
         sampling.pack_sequences(ntok, "doc_id", "ntok", 512, shards=4)
         sampling.sample_per_group(docs, "doc_id", "lang", 5)
+        cached = [
+            sampling.global_shuffle(docs, "doc_id", seed=3),
+            assign_surrogate_ids(docs, "sid", ["lang", "doc_id"], mode="distributed"),
+            derive_observation_period({"visit_occurrence": visits}),
+        ]
         text.text_stats(docs)
         text.lang_id(docs)
         text.token_counts(docs)
@@ -314,6 +347,8 @@ def test_pure_plan_builders_run_no_jobs(spark, sf_dir):
     finally:
         sc.setJobGroup("default", "")
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for df in cached:
+        release_cached(df)
 
 
 def test_semantic_cells_broadcasts_centroids(spark, sf_dir):

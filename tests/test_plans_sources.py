@@ -14,7 +14,13 @@ from pedsnetdcc_spark.plans.packages import (
     run_package,
 )
 from pedsnetdcc_spark.plans.pipeline import Job, check_jobs, run_parallel, run_serial
-from pedsnetdcc_spark.sources.io import TableStore, delete_rows, prep_namespace, read_table
+from pedsnetdcc_spark.sources.io import (
+    TableStore,
+    delete_rows,
+    prep_namespace,
+    read_table,
+    read_tables,
+)
 from pedsnetdcc_spark.sources.views import register_views
 
 
@@ -105,6 +111,18 @@ def test_package_config_front_end(spark, sf_dir, tmp_path):
         json.dump({"site": "s"}, f)
     with pytest.raises(ValueError):
         load_package_config(str(tmp_path / "bad.json"))
+
+
+def test_read_tables_matches_serial_reads(spark, sf_dir):
+    """Concurrent resolution returns the tables in the order asked,
+    each with the schema a serial read_table gives (events carries the
+    nanosecond timestamps read_table converts)."""
+    names = ["events", "customer", "nation", "documents", "orders"]
+    got = read_tables(spark, sf_dir, names)
+    assert list(got) == names
+    for n in names:
+        assert got[n].schema == read_table(spark, sf_dir, n).schema
+    assert read_tables(spark, sf_dir, []) == {}
 
 
 def test_prep_namespace_and_views(spark, sf_dir):

@@ -72,6 +72,43 @@ def test_validate_table_reports_violations(spark):
     assert out["fk:location_id->location.location_id"] == 1
 
 
+def test_validate_table_equals_separate_checks(spark):
+    """The fused PK/NOT NULL aggregate reports exactly what the three
+    separate checks give: duplicate key groups (a pair, a triplicate
+    and a NULL-key group), NULLs in two NOT NULL columns and one
+    dangling FK."""
+    rows = [
+        (1, dt.datetime(2000, 1, 1), 8507, 10),
+        (1, dt.datetime(2000, 1, 2), 8507, 10),  # pair
+        (2, None, 8532, None),
+        (2, dt.datetime(2000, 1, 3), None, 10),
+        (2, dt.datetime(2000, 1, 4), 8507, 10),  # triplicate
+        (None, dt.datetime(2000, 1, 5), 8507, 10),
+        (None, None, 8532, 10),  # NULL-key group
+        (3, dt.datetime(2000, 1, 6), 8507, 99),  # dangling location
+        (4, dt.datetime(2000, 1, 7), None, 10),
+    ]
+    person = spark.createDataFrame(
+        rows, "person_id long, birth_datetime timestamp, gender_concept_id int, location_id long"
+    )
+    location = spark.createDataFrame([(10,)], "location_id long")
+    schema = stock_schemas()["person"]
+    got = validate_table(person, schema, {"location": location})
+
+    want = {"pk:person_id": pk_violations(person, ["person_id"]).count()}
+    nn = [f.name for f in schema.struct.fields if not f.nullable and f.name in person.columns]
+    for r in not_null_violation_counts(person, nn).collect():
+        want[f"notnull:{r['column']}"] = r["null_count"]
+    want["fk:location_id->location.location_id"] = fk_violations(
+        person, "location_id", location, "location_id"
+    ).count()
+    assert got == want
+    assert got["pk:person_id"] == 3
+    assert got["notnull:birth_datetime"] == 2 and got["notnull:gender_concept_id"] == 2
+    assert got["notnull:person_id"] == 2
+    assert got["fk:location_id->location.location_id"] == 1
+
+
 def test_fk_violation_rows(spark):
     df = spark.createDataFrame([(1, 10), (2, 99), (3, None)], "id long, fk long")
     ref = spark.createDataFrame([(10,)], "k long")
