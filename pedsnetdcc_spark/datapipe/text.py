@@ -838,7 +838,11 @@ def lm_score(
     implementations, which the rounding absorbs — same determinism
     contract as :func:`tfidf_top_terms`).
 
-    Returns ``(id, n_tokens, sum_logp, avg_logp)``.
+    Returns ``(id, n_tokens, sum_logp, avg_logp)``.  The result reads
+    cached relations (the staged token tables of the scored corpus and
+    of a foreign ``model_df``), which must stay cached until the
+    caller's action on the result has run; the caller releases them
+    afterwards (``util.release_cached(result)``).
 
     Scale shape: two token-keyed count aggregates (map-side partial),
     a 1-row totals broadcast, and count→stream equi-joins on token keys
@@ -898,9 +902,7 @@ def lm_score(
     # scan+tokenize stage sets per run; exchange reuse cannot fold
     # them because the branch projections differ).  The staged token
     # table is cached and every stream derives from it — one tokenize
-    # pass; the cache is derived within-query data, cleared by the
-    # session's normal cache lifecycle (same pattern as the fused
-    # image-codec hash table).
+    # pass; the caller releases it after its action (see docstring).
     st = _staged(df, with_id=True).cache()
     a = F.col("__a")
     d_bi = _streams(st, with_id=True)[1]

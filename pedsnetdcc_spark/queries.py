@@ -580,7 +580,8 @@ def q_streaming_interval_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the foreachBatch merge aggregates per user_id in BATCH mode but
     # inherits the session shuffle conf at each micro-batch — scope it
-    # to the stream's key volume like the stateful queries
+    # like the stateful queries (min(8, cores): every partition is a
+    # task per micro-batch, whatever the batch holds)
     from pedsnetdcc_spark.streaming.incremental import (
         scoped_stream_shuffle_partitions,
     )
@@ -662,9 +663,10 @@ def q_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = streaming_event_counts(
         stream, "ts", ["event_type"], window_duration="1 day", watermark="2 days"
     )
-    # state-store partitions sized to the stream's key cardinality
-    # (~200 day-windows × event types), not the batch session's
-    # core-count default — see scoped_stream_shuffle_partitions
+    # one state store per partition, each committed every micro-batch:
+    # scoped_stream_shuffle_partitions sizes them min(8, cores), which
+    # spreads ~200 day-windows × event types amply, instead of the
+    # batch session's shuffle-partition count
     from pedsnetdcc_spark.streaming.incremental import (
         scoped_stream_shuffle_partitions,
     )
@@ -846,9 +848,10 @@ def q_streaming_interval_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, ["user_id", "event_type"], "start_ts", "end_ts",
         gap_days=_ERA_GAP, watermark=f"{_STREAM_ERA_WATERMARK_DAYS} days",
     )
-    # state-store partitions sized to the stream's key cardinality
-    # (≤ _STREAM_ERA_USER_CAP users × event types), not the batch
-    # session's core-count default — see scoped_stream_shuffle_partitions
+    # one state store per partition and operator, each committed every
+    # micro-batch: scoped_stream_shuffle_partitions sizes them
+    # min(8, cores), which spreads ≤ _STREAM_ERA_USER_CAP users × event
+    # types amply, instead of the batch session's shuffle-partition count
     from pedsnetdcc_spark.streaming.incremental import (
         scoped_stream_shuffle_partitions,
     )
@@ -2744,9 +2747,9 @@ def q_streaming_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "doc_id", "text", num_hashes=8, num_bands=4,
         hash_family="portable",
     )
-    # state-store partitions sized to the stream's key cardinality
-    # (band×bucket groups of the 2000-doc capped universe), not the
-    # batch session's core-count default
+    # state-store partitions sized min(8, cores) by
+    # scoped_stream_shuffle_partitions (band×bucket groups of the
+    # 2000-doc capped universe), not the batch session's count
     from pedsnetdcc_spark.streaming.incremental import (
         scoped_stream_shuffle_partitions,
     )
@@ -3316,8 +3319,8 @@ def q_ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # through the persisted-offset validation and sets the option.
         # The foreachBatch append repartitions by centroid_id in BATCH
         # mode but inherits the session shuffle conf and AQE is off for
-        # streaming-derived plans — scope it to the stream's key volume
-        # (16 cells here) like the other streaming queries
+        # streaming-derived plans — scope it like the other streaming
+        # queries (min(8, cores) partitions for 16 cells here)
         from pedsnetdcc_spark.streaming.incremental import (
             scoped_stream_shuffle_partitions,
         )

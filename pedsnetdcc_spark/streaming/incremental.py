@@ -28,38 +28,51 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: default shuffle/state partition count for the *streaming* queries —
-#: deliberately NOT the batch session default (= core count).  A
-#: stateful streaming query's shuffle-partition count is its
-#: state-store count: it is pinned into the checkpoint at batch 0 for
-#: the life of the stream, AQE never coalesces it (AQE is disabled
-#: under the micro-batch planner), and EVERY micro-batch pays one task
-#: launch + one state-store open/commit (delta file write + fsync) per
-#: partition regardless of how little data arrived.  So the right
-#: size tracks the stream's KEY CARDINALITY / state volume, not the
-#: submitting machine's cores.  The bench streams are key-bounded by
-#: contract (≤500 era keys, ≤~200 windows, ≤band×bucket groups of a
-#: 2000-doc capped universe), where 8 partitions spread state amply;
-#: a production deployment with millions of state keys raises
-#: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS at submit time (the value
-#: must then stay fixed across restarts of the same checkpoint —
-#: Spark enforces this).  A fixed small default also keeps the bench
-#: comparable across the driver's core counts: the per-batch overhead
-#: no longer scales with local core count.
-DEFAULT_STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-)
+#: cap on the DEFAULT shuffle/state partition count of the *streaming*
+#: queries — deliberately NOT the batch session default.  A stateful
+#: streaming query's shuffle-partition count is its state-store count,
+#: and the cost is per store per batch: AQE never coalesces inside a
+#: micro-batch, so EVERY micro-batch pays, for each stateful operator,
+#: one task and one state-store commit (a delta file plus its checksum
+#: companion, each with a Hadoop ``.crc``, and a forked ``chmod`` /
+#: ``readlink`` per file operation when Hadoop's local filesystem has
+#: no native library) per partition, however little data arrived.
+#: So :func:`scoped_stream_shuffle_partitions` sizes a stream to
+#: ``min(8, defaultParallelism)``: never more stores than cores to
+#: commit them in one wave (on a 4-vCPU host the two-operator era
+#: stream's 16 commits per batch ran in two waves; at 4 partitions its
+#: state-commit p50 fell 835 → 459 ms and the perfbench
+#: ``incremental_ingest`` warm pass 18%), and never
+#: more than 8, which spreads the bench streams' key-bounded state
+#: amply (≤500 era keys, ≤~200 windows, ≤band×bucket groups of a
+#: 2000-doc capped universe) and keeps hosts with ≥8 cores at the
+#: count they always had.  Spark records the count in the checkpoint at
+#: batch 0 and RESTORES it from the offset log on every restart, so a
+#: stream started under an older or larger size keeps it; the default
+#: only sizes new checkpoints.  Under dynamic allocation
+#: ``defaultParallelism`` counts only the executors present when the
+#: stream starts, so a stream whose state will outgrow that — or a
+#: production deployment with millions of state keys — passes ``n`` or
+#: sets ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` at submit time.
+DEFAULT_STREAM_SHUFFLE_PARTITIONS = 8
 
 
 @contextmanager
 def scoped_stream_shuffle_partitions(spark, n: int | None = None):
     """Set ``spark.sql.shuffle.partitions`` for the duration of a
     streaming query's start→drain window, restoring the batch session
-    value after.  The value is captured by the stream's checkpoint at
-    batch 0, so restoring after ``awaitTermination`` cannot affect the
+    value after (also when the block raises).  The size is ``n``, else
+    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``, else
+    ``min(DEFAULT_STREAM_SHUFFLE_PARTITIONS, defaultParallelism)``.
+    The value is captured by the stream's checkpoint at batch 0, so
+    restoring after ``awaitTermination`` cannot affect the
     already-planned batches; batch queries planned outside the scope
     are untouched."""
-    n = n or DEFAULT_STREAM_SHUFFLE_PARTITIONS
+    n = (
+        n
+        or int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS") or 0)
+        or min(DEFAULT_STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

@@ -219,12 +219,12 @@ def parquet_dir_num_rows(path: str) -> int:
     underscore-prefixed path components are skipped, exactly like
     Spark's own partition discovery: a ``_temporary`` dir left by a
     crashed concurrent writer must not leak partial files into the
-    receipt."""
+    receipt.  A path that does not exist counts 0 rows."""
     import pyarrow.parquet as _pq
     from pyarrow import fs as _fs
 
     filesystem, root = pyarrow_fs_and_path(path)
-    sel = _fs.FileSelector(root, recursive=True)
+    sel = _fs.FileSelector(root, recursive=True, allow_not_found=True)
     total = 0
     for info in filesystem.get_file_info(sel):
         if info.type != _fs.FileType.File or not info.path.endswith(".parquet"):

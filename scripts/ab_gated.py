@@ -42,16 +42,22 @@ def _steal_pct(before, after):
 
 
 def _arm(query: str, envvar: str, value: str, repo: str):
+    """One fresh-JVM arm: ``(sec, steal_pct)``.  An arm that outlives
+    its 900 s timeout is killed and reports ``sec=None``, so it is recorded
+    as rejected instead of ending the whole A/B."""
     env = os.environ.copy()
     env[envvar] = value
     t0 = _cpu_ticks()
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "bench.py"),
-         "--isolated-worker", query],
-        capture_output=True, text=True, timeout=900, env=env,
-    )
-    steal = _steal_pct(t0, _cpu_ticks())
-    return _last_sec(proc.stdout), steal
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.join(repo, "bench.py"),
+             "--isolated-worker", query],
+            capture_output=True, text=True, timeout=900, env=env,
+        )
+        sec = _last_sec(proc.stdout)
+    except subprocess.TimeoutExpired:
+        sec = None
+    return sec, _steal_pct(t0, _cpu_ticks())
 
 
 def _last_sec(stdout: str) -> float | None:

@@ -4506,3 +4506,13 @@ def test_index_metadata_io_is_filesystem_dispatched(tmp_path):
     fs2, p2 = pyarrow_fs_and_path(f"file://{d}")
     assert p1 == str(d) and p2 == str(d)
     assert type(fs1).__name__ == type(fs2).__name__ == "LocalFileSystem"
+
+
+def test_parquet_dir_num_rows_missing_dir_is_zero(tmp_path):
+    """A directory that was never written holds no rows: the footer
+    count reads 0 for it, bare path or URI, instead of raising."""
+    from pedsnetdcc_spark.util import parquet_dir_num_rows
+
+    missing = tmp_path / "never_written"
+    assert parquet_dir_num_rows(str(missing)) == 0
+    assert parquet_dir_num_rows(f"file://{missing}") == 0

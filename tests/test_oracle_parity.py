@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from pedsnetdcc_spark.queries import ORACLES, QUERIES
+from pedsnetdcc_spark.util import release_cached
 from tests.oracle import compare, duck_connection
 
 
@@ -20,7 +21,29 @@ def con(sf_dir):
 def test_query_matches_oracle(spark, sf_dir, con, name):
     df = QUERIES[name](spark, sf_dir)
     problems = compare(df, con, ORACLES[name])
+    # a query returns a lazy result, so the caller releases what its
+    # plan cached once the action has run
+    release_cached(df)
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_release_cached_frees_query_staging(spark, sf_dir):
+    """``global_shuffle`` (the distributed id assigner) and
+    ``lm_perplexity`` (the staged token table) cache relations their
+    results read; after the caller's collect, ``release_cached`` on the
+    result leaves exactly the persistent RDDs there were before."""
+    before = _persistent_rdd_ids(spark)
+    dfs = [QUERIES[n](spark, sf_dir) for n in ("global_shuffle", "lm_perplexity")]
+    for df in dfs:
+        df.collect()
+    assert _persistent_rdd_ids(spark) - before, "nothing was cached"
+    for df in dfs:
+        release_cached(df)
+    assert _persistent_rdd_ids(spark) == before
 
 
 #: The only Spark↔DuckDB output-type pairs any oracle is allowed to

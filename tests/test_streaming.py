@@ -706,3 +706,119 @@ def test_streaming_time_bounded_join_checkpoint_restart(spark):
         assert run_once().count() == 2
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+_ERA_SCHEMA = "user_id long, start_ts timestamp, end_ts timestamp"
+
+
+def _era_files():
+    """Two source files for the interval-era stream: the first holds a
+    January era and a February era per user; the second extends the
+    February era of the even users and advances the watermark past
+    every February horizon."""
+    import datetime as dt
+
+    D = dt.datetime
+    first = [(u, D(2024, 1, 1 + u % 5), D(2024, 1, 2 + u % 5)) for u in range(1, 13)]
+    first += [(u, D(2024, 2, 1), D(2024, 2, 2 + u % 3)) for u in range(1, 13)]
+    second = [(u, D(2024, 2, 6), D(2024, 2, 7)) for u in range(2, 13, 2)]
+    second += [(99, D(2024, 4, 1), D(2024, 4, 2))]
+    return first, second
+
+
+def _run_era_stream(spark, src, out, ckpt, n=None):
+    """Drain the interval-era stream over ``src`` (one file per
+    micro-batch) under ``scoped_stream_shuffle_partitions(spark, n)``;
+    returns the ``numShufflePartitions`` of every state operator of
+    every batch."""
+    from pedsnetdcc_spark.streaming.incremental import (
+        scoped_stream_shuffle_partitions,
+        streaming_interval_eras,
+    )
+
+    stream = spark.readStream.schema(_ERA_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
+    eras = streaming_interval_eras(
+        stream, ["user_id"], "start_ts", "end_ts", gap_days=7, watermark="5 days"
+    )
+    with scoped_stream_shuffle_partitions(spark, n):
+        q = (
+            eras.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(120), "stream did not drain"
+            progress = list(q.recentProgress)
+        finally:
+            q.stop()
+    ops = [op for p in progress for op in p["stateOperators"]]
+    # the watermarked dedup and the session window
+    assert ops and all(len(p["stateOperators"]) == 2 for p in progress)
+    return [op["numShufflePartitions"] for op in ops]
+
+
+def _emitted_eras(spark, out):
+    return sorted(
+        map(tuple, spark.read.schema(
+            "user_id long, era_start_ts timestamp, era_end_ts timestamp, era_count long"
+        ).parquet(out).collect())
+    )
+
+
+def test_stream_state_partitions_default_to_cores(spark, tmp_path, monkeypatch):
+    """The default state-store count is min(8, defaultParallelism): on
+    the local[4] test session both state operators of the era stream
+    run 4 partitions.  An explicit ``n`` and the env override win over
+    the default, and the batch session value comes back even when the
+    scoped block raises."""
+    from pedsnetdcc_spark.streaming.incremental import scoped_stream_shuffle_partitions
+
+    assert spark.sparkContext.defaultParallelism == 4
+    first, _ = _era_files()
+    src = str(tmp_path / "src")
+    spark.createDataFrame(first, _ERA_SCHEMA).coalesce(1).write.parquet(src)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    parts = _run_era_stream(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert set(parts) == {4}
+
+    batch = spark.conf.get("spark.sql.shuffle.partitions")
+    with scoped_stream_shuffle_partitions(spark, 3):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "2")
+    with scoped_stream_shuffle_partitions(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    with scoped_stream_shuffle_partitions(spark, 3):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    with pytest.raises(RuntimeError), scoped_stream_shuffle_partitions(spark, 5):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+        raise RuntimeError("stream failed")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == batch
+
+
+def test_stream_checkpoint_keeps_its_state_partitions(spark, tmp_path, monkeypatch):
+    """A checkpoint started at 8 state partitions keeps 8 when restarted
+    under the core-sized default (4 on local[4]): Spark restores the
+    count from the offset log.  The restarted stream emits exactly the
+    eras of an uninterrupted run over both files, which itself runs at
+    the default 4 partitions."""
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    first, second = _era_files()
+    src = str(tmp_path / "src")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    spark.createDataFrame(first, _ERA_SCHEMA).coalesce(1).write.parquet(src)
+    assert set(_run_era_stream(spark, src, out, ckpt, n=8)) == {8}
+    emitted_first = _emitted_eras(spark, out)
+    assert emitted_first  # the January eras closed in the first run
+
+    spark.createDataFrame(second, _ERA_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    assert set(_run_era_stream(spark, src, out, ckpt)) == {8}
+    restarted = _emitted_eras(spark, out)
+    assert len(restarted) > len(emitted_first)
+
+    whole_out = str(tmp_path / "whole_out")
+    parts = _run_era_stream(spark, src, whole_out, str(tmp_path / "whole_ckpt"))
+    assert set(parts) == {4}
+    assert restarted == _emitted_eras(spark, whole_out)
