@@ -20,9 +20,12 @@ Scale design:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pedsnetdcc_spark.datapipe import delta_index as DI
 from pedsnetdcc_spark.datapipe.text import shingle_ngrams, tokens
 from pedsnetdcc_spark.util import repartition_by_key
 
@@ -1529,8 +1532,52 @@ def drop_duplicate_spans(
 # re-scanning the old text.  The dedup-family twin of the persistent
 # IVF index (similarity.build_ivf_index): build offline, append each
 # generation as an atomic delta, compact when the delta pile grows,
-# query (= dedup new docs) against base ∪ deltas.
+# query (= dedup new docs) against base ∪ deltas.  The lifecycle itself
+# (locking, commits, crash recovery, watermark, compaction, stream
+# sink) is datapipe.delta_index; this section supplies the data hooks.
 # ---------------------------------------------------------------------------
+
+
+def _span_counts(df: DataFrame, meta: dict, text_col: str) -> DataFrame:
+    """Per-key shingle counts of ``df`` under the index's shingle
+    parameters (the span index's delta rows)."""
+    toks = df.select(
+        F.col(meta["id_col"]),
+        F.split(F.col(text_col), _regex_literal(meta["sep"])).alias("__arr"),
+    ).where(F.size("__arr") >= meta["k"])
+    return (
+        _span_shingle_keys(toks, meta["id_col"], meta["k"], meta["sep"],
+                           meta["digest"])
+        .groupBy("__key")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _sum_counts(base: DataFrame, delta: DataFrame) -> DataFrame:
+    return base.unionByName(delta).groupBy("__key").agg(F.sum("cnt").alias("cnt"))
+
+
+def _span_receipt(keys_dir: str | None, folded: int) -> dict:
+    # new base's row count from its parquet FOOTERS (no Spark job)
+    from pedsnetdcc_spark.util import parquet_dir_num_rows
+
+    n = None if keys_dir is None else parquet_dir_num_rows(keys_dir)
+    return {"keys": n, "generations_folded": folded}
+
+
+_SPAN = DI.Layout(
+    name="a span index",
+    family="span",
+    base="keys",
+    delta_key="gen",
+    id_width=0,
+    noun="generation",
+    offset_marker="_span_generation_offset.json",
+    cluster_key="__key",
+    partitioned=False,
+    merge=_sum_counts,
+    receipt=_span_receipt,
+)
 
 
 def build_span_index(
@@ -1550,7 +1597,7 @@ def build_span_index(
 
         keys/            (__key, cnt)   — one parquet dir, key-clustered
         keys_delta/gen=N/ ...           — per-generation appends
-        meta.json        (k, sep, digest, generations)
+        meta.json        (k, sep, digest, id_col, folded_through_generation)
 
     One hash aggregate over the corpus (map-side partial combine
     absorbs hot boilerplate shingles) + one clustered write; the text
@@ -1558,110 +1605,19 @@ def build_span_index(
     index's whole life (meta-enforced): ``"xxh64"`` for production
     (8-byte keys), ``"md5"`` where a DuckDB replay matters.
 
-    Building REPLACES the index wholesale: any existing keys, deltas,
-    and meta at ``path`` are removed first, so a rebuild can never mix
-    a fresh base with stale generation deltas or an old meta's shingle
-    parameters (counts inflated / key families mixed).  A crashed build
-    leaves a LOUDLY unreadable index (missing meta or uncommitted
-    keys), never a quietly wrong one — re-run the build.
+    Building REPLACES the index wholesale (keys, deltas, watermark), so
+    a rebuild can never mix a fresh base with stale generations.  A
+    non-empty ``path`` that does not look like a span index is REFUSED
+    unless ``force=True``; the build holds the index's ``.writer.lock``
+    (:func:`pedsnetdcc_spark.datapipe.delta_index.build`)."""
+    meta = {"k": k, "sep": sep, "digest": digest, "id_col": id_col}
 
-    Because the replace is destructive, a ``path`` that already exists,
-    is non-empty, and does NOT look like a span index (no ``meta.json``
-    and no crashed-build/compaction debris) is REFUSED unless
-    ``force=True`` — so an operator who transposes the corpus and index
-    arguments (or points the CLI verb at a data directory) cannot
-    silently delete it.
-
-    SINGLE-WRITER: holds the index's ``.writer.lock``
-    (:func:`pedsnetdcc_spark.util.index_writer_lock`) for the whole
-    replace, so a concurrent build/append/compact fails immediately
-    with :class:`~pedsnetdcc_spark.util.IndexWriterLocked` instead of
-    racing the rmtree/rename window."""
-    import json as _json
-    import os as _os
-
-    from pedsnetdcc_spark.util import (
-        clear_index_children,
-        index_writer_lock,
-        repartition_by_key,
-    )
-
-    if not force and _os.path.isdir(path) and _os.listdir(path):
-        # A real index always has meta.json; a crashed build/compaction
-        # leaves keys/ or dot-prefixed debris (including a dead
-        # writer's .writer.lock).  Anything else is some other
-        # directory the caller almost certainly did not mean.
-        looks_like_index = any(
-            _os.path.exists(_os.path.join(path, p))
-            for p in ("meta.json", "keys", ".keys.compact.tmp",
-                      ".writer.lock")
-        )
-        if not looks_like_index:
-            raise ValueError(
-                f"refusing to replace {path!r}: it exists, is non-empty, "
-                "and does not look like a span index (no meta.json). "
-                "Pass force=True (CLI: --force) to overwrite it anyway."
-            )
-    with index_writer_lock(path, "build"):
-        toks = df.select(
-            F.col(id_col),
-            F.split(F.col(text_col), _regex_literal(sep)).alias("__arr"),
-        ).where(F.size("__arr") >= k)
-        counts = (
-            _span_shingle_keys(toks, id_col, k, sep, digest)
-            .groupBy("__key")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        clear_index_children(path)
-        repartition_by_key(counts, "__key").write.mode("overwrite").parquet(
-            _os.path.join(path, "keys")
-        )
-        meta = {"k": k, "sep": sep, "digest": digest, "id_col": id_col}
-        tmp_meta = _os.path.join(path, ".meta.json.tmp")
-        with open(tmp_meta, "w") as f:
-            _json.dump(meta, f, sort_keys=True)
-        _os.replace(tmp_meta, _os.path.join(path, "meta.json"))
+    def populate() -> dict:
+        counts = _span_counts(df, meta, text_col)
+        DI.write_layout(counts, os.path.join(path, "keys"), _SPAN)
         return meta
 
-
-def _span_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "meta.json")) as f:
-        return _json.load(f)
-
-
-def _recover_span_compaction(path: str, recover: bool = True) -> None:
-    """Roll a crashed compaction FORWARD: if ``keys/`` is missing but
-    the fully-written ``.keys.compact.tmp`` exists (the temp is always
-    complete before the base moves aside), finish the swap and drop the
-    delta — whichever name the crash left it under; the temp already
-    contains every generation, so removing it can never lose data and
-    keeping it would double-count.  EVERY lifecycle entry point (read,
-    append, compact) runs this first, so no writer can commit a new
-    generation into a delta dir that a later recovery would delete.
-
-    ``recover=False`` (for read-only mounts) raises instead of
-    mutating when the crashed state is present."""
-    import os as _os
-    import shutil as _shutil
-
-    keys_dir = _os.path.join(path, "keys")
-    tmp = _os.path.join(path, ".keys.compact.tmp")
-    if _os.path.isdir(keys_dir) or not _os.path.isdir(tmp):
-        return
-    if not recover:
-        raise RuntimeError(
-            f"span index at {path!r} has a crashed compaction (keys/ "
-            "missing, .keys.compact.tmp complete) and recover=False was "
-            "requested; run compact_span_index (or any read with "
-            "recover=True) on a writable mount to roll the swap forward"
-        )
-    _os.rename(tmp, keys_dir)
-    _shutil.rmtree(_os.path.join(path, ".keys.old"), ignore_errors=True)
-    _shutil.rmtree(_os.path.join(path, "keys_delta"), ignore_errors=True)
-    _shutil.rmtree(_os.path.join(path, ".keys_delta.old"), ignore_errors=True)
+    return DI.build(path, _SPAN, force, populate)
 
 
 def append_span_index(
@@ -1673,244 +1629,55 @@ def append_span_index(
 ) -> dict:
     """Fold a NEW generation of documents into the index as an atomic
     ``keys_delta/gen=N`` directory — per-key counts of the new docs
-    only, written to a dot-prefixed temp and renamed (a crashed append
-    leaves no readable partial; Spark's discovery ignores dot-paths).
-    The shingle parameters come from the index's meta, so an append can
-    never silently mix key families.
+    only.  The shingle parameters come from the index's meta, so an
+    append can never silently mix key families.  Commit semantics are
+    :func:`pedsnetdcc_spark.datapipe.delta_index.append`'s:
 
-    A compaction that crashed in its no-``keys/`` window is rolled
-    forward FIRST (:func:`_recover_span_compaction`) — otherwise this
-    append could commit ``gen=N`` into a ``keys_delta`` whose contents
-    the next reader's recovery is contractually required to delete,
-    silently losing the generation.
+    - SINGLE-WRITER (enforced): holds the ``.writer.lock``; a
+      concurrent writer fails with
+      :class:`~pedsnetdcc_spark.util.IndexWriterLocked`.
+    - ``generation=None`` auto-numbers above every committed or folded
+      generation and is NOT retry-idempotent (a blind re-run folds the
+      same documents again); an at-least-once scheduler passes an
+      explicit ``generation``, and a retry then REPLACES its delta.
+    - A tagged generation at or below meta's
+      ``folded_through_generation`` is a no-op, returned as
+      ``{"generation": n, "skipped_folded_replay": True}``.
+    - A batch with zero shingle keys commits nothing:
+      ``{"generation": n, "empty": True}``.
 
-    SINGLE-WRITER contract (ENFORCED): holds the index's
-    ``.writer.lock`` for the whole append, so a concurrent
-    append/compact/build fails immediately with
-    :class:`~pedsnetdcc_spark.util.IndexWriterLocked` — it can no
-    longer rmtree this writer's in-progress temp before the rename
-    race surfaced (the pre-lock failure mode).  The reference
-    serializes DDL through its transaction runner the same way
-    (reference: pedsnetdcc/transform_runner.py:901-927).
-
-    RETRY IDEMPOTENCE: with ``generation=None`` (auto-numbering) the
-    append is NOT retry-idempotent — if the caller's job dies after
-    the ``gen=N`` rename but before recording success, a blind re-run
-    folds the same documents AGAIN as ``gen=N+1``, inflating every
-    count.  An at-least-once scheduler must pass an explicit
-    ``generation`` tag: a retried append then REPLACES its own
-    generation directory instead of duplicating it.
-
-    REPLAY WATERMARK (round 13, IVF parity): a tagged generation at or
-    below meta's ``folded_through_generation`` is a NO-OP (returned as
-    ``{"generation": n, "skipped_folded_replay": True}``) — a
-    compaction already folded its rows into the base (legal between a
-    stream crash and its restart), so re-committing the delta would
-    double-count every row next to its folded copy.  This replaces the
-    old "record append success before compacting" convention with a
-    mechanism, exactly as :func:`compact_ivf_index`'s
-    ``folded_through_epoch`` did for the IVF index; the watermark is
-    written atomically BEFORE the compaction swap, so every reachable
-    crash state counts each generation exactly once.  Auto-numbering
-    also starts ABOVE the watermark, so generation ids stay monotonic
-    across compactions (:func:`next_generation_offset` relies on it).
-
-    An append whose batch yields ZERO shingle keys (all documents
-    shorter than ``k`` tokens, or an empty streaming micro-batch)
-    commits nothing — a committed ``gen=N`` with no parquet data files
-    is the one delta state ``spark.read.parquet`` schema inference can
-    fail on; returned as ``{"generation": n, "empty": True}``."""
-    import os as _os
-    import shutil as _shutil
-
-    from pedsnetdcc_spark.util import index_writer_lock, repartition_by_key
-
-    with index_writer_lock(path, "append"):
-        if live_lineage_checkpoint is not None:
-            # streaming sink's liveness guard (checked INSIDE the lock,
-            # registration happens under the same lock): a superseded
-            # stream fails loudly here instead of committing a delta
-            # whose id range collides with its successor's
-            from pedsnetdcc_spark.util import assert_live_lineage
-
-            assert_live_lineage(path, live_lineage_checkpoint)
-        _recover_span_compaction(path)
-        # meta is read INSIDE the lock: folded_through_generation is
-        # mutable (a concurrent compact updates it); shingle params are
-        # frozen at build time
-        meta = _span_index_meta(path)
-        folded = int(meta.get("folded_through_generation", -1))
-        if generation is None:
-            gens = [int(g.split("=", 1)[1]) for g in _span_index_gens(path)]
-            n = max([folded, *gens]) + 1
-        else:
-            n = int(generation)
-            if n <= folded:
-                return {"generation": n, "skipped_folded_replay": True}
-        k, sep, digest = meta["k"], meta["sep"], meta["digest"]
-        id_col = meta["id_col"]
-        toks = df.select(
-            F.col(id_col),
-            F.split(F.col(text_col), _regex_literal(sep)).alias("__arr"),
-        ).where(F.size("__arr") >= k)
-        counts = (
-            _span_shingle_keys(toks, id_col, k, sep, digest)
-            .groupBy("__key")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        delta_root = _os.path.join(path, "keys_delta")
-        final = _os.path.join(delta_root, f"gen={n}")
-        tmp = _os.path.join(delta_root, f".tmp-gen-{n}")
-        _shutil.rmtree(tmp, ignore_errors=True)
-        repartition_by_key(counts, "__key").write.mode("overwrite").parquet(tmp)
-        # emptiness is checked on the WRITTEN tmp's parquet FOOTERS
-        # (driver-side metadata read, no Spark job) rather than on
-        # `counts` (which would re-run the aggregation) or a
-        # read-back isEmpty (which scheduled a scan job per append —
-        # every streaming micro-batch paid it): zero keys — every doc
-        # shorter than k, or an empty streaming micro-batch — commits
-        # nothing, so gen dirs never pile up schema-only debris and
-        # auto-compact thresholds count only real generations
-        from pedsnetdcc_spark.util import parquet_dir_num_rows
-
-        if parquet_dir_num_rows(tmp) == 0:
-            _shutil.rmtree(tmp, ignore_errors=True)
-            return {"generation": n, "empty": True}
-        _os.makedirs(delta_root, exist_ok=True)
-        if generation is not None:
-            # explicit tag = retry semantics: replace this generation's
-            # previous (possibly partial-success) commit, never duplicate
-            _shutil.rmtree(final, ignore_errors=True)
-        _os.rename(tmp, final)
-        return {"generation": n}
+    Otherwise returns ``{"generation": n}``."""
+    return DI.append(
+        df, path, _SPAN, generation,
+        lambda batch, meta: _span_counts(batch, meta, text_col),
+        live_lineage_checkpoint=live_lineage_checkpoint,
+    )
 
 
 def _span_index_gens(path: str) -> list[str]:
-    """The COMMITTED generation deltas (``gen=N`` dirs) — a crashed
-    append's dot-prefixed temp is invisible here, so a stranded temp
-    can neither be read nor make the delta dir look non-empty."""
-    import os as _os
-
-    delta = _os.path.join(path, "keys_delta")
-    if not _os.path.isdir(delta):
-        return []
-    return sorted(g for g in _os.listdir(delta) if g.startswith("gen="))
+    """The COMMITTED generation deltas as ``gen=N`` names."""
+    return [f"gen={n}" for n in DI.committed_ids(path, _SPAN)]
 
 
 def _span_index_counts(spark, path: str, recover: bool = True) -> DataFrame:
-    """The index's current per-key counts: base ∪ deltas, summed.  A
-    compacted index (no COMMITTED deltas — the common serving state;
-    a crashed append's stranded temp does not count) skips the
-    re-aggregation entirely: the base is one-row-per-key by
-    construction, so the sum would be a full extra shuffle of the
-    largest table in the query for nothing.  If a compaction crashed
-    between its two renames (base at ``.keys.old``, complete new base
-    at ``.keys.compact.tmp``), the swap is FINISHED here before
-    reading (:func:`_recover_span_compaction`) — note this means a
-    read can perform recovery WRITES; pass ``recover=False`` on a
-    read-only mount to raise loudly instead of mutating."""
-    import os as _os
-
-    _recover_span_compaction(path, recover=recover)
-    keys = spark.read.parquet(_os.path.join(path, "keys"))
-    gens = _span_index_gens(path)
-    if not gens:
-        return keys
-    delta = _os.path.join(path, "keys_delta")
-    keys = keys.unionByName(spark.read.parquet(delta).select("__key", "cnt"))
-    return keys.groupBy("__key").agg(F.sum("cnt").alias("cnt"))
+    """The index's current per-key counts: base ∪ deltas, summed — or
+    the base alone when no delta is committed (one row per key by
+    construction, so the sum would be a shuffle for nothing).  A
+    crashed compaction is rolled forward first; ``recover=False``
+    raises instead (read-only mounts)."""
+    return DI.read(spark, path, _SPAN, recover=recover)
 
 
 def compact_span_index(spark, path: str) -> dict:
     """Fold the generation deltas back into the base keys — sum counts
     per key, restore the one-directory key-clustered layout, swap by
-    rename, drop the deltas.  Bounds the per-query union fan-in the way
-    compact_ivf_index does for cells.
-
-    Crash-safety contract: the folded layout is FULLY written to a
-    dot-prefixed temp before anything moves; the base and the delta
-    dir are then renamed aside BEFORE the temp lands, so no reachable
-    crash state double-counts a delta (the folded temp already contains
-    it) or loses one (the delta only moves aside after the temp that
-    absorbed it is complete).  The one crash window with no ``keys/``
-    directory is rolled FORWARD by the next reader
-    (:func:`_span_index_counts`); dot-prefixed debris is invisible to
-    readers and swept by the next compaction.
-
-    A PREVIOUS compaction's crash is rolled forward before the
-    generation listing (mirroring ``compact_ivf_index``), so a crashed
-    index compacts as a clean no-op instead of raising mid-swap on a
-    delta dir the recovery just removed.  Single-writer contract
-    (ENFORCED via ``.writer.lock``): see :func:`append_span_index`.
-
-    Writes meta's ``folded_through_generation`` watermark atomically
-    BEFORE the swap (IVF parity, round 13), making tagged-generation
-    replays — a stream crashing between its delta commit and its
-    checkpoint commit, then restarting after this compaction folded
-    the generation — exactly-once instead of double-counted."""
-    import os as _os
-    import shutil as _shutil
-
-    from pedsnetdcc_spark.util import index_writer_lock, repartition_by_key
-
-    with index_writer_lock(path, "compact"):
-        _recover_span_compaction(path)
-        delta_dir = _os.path.join(path, "keys_delta")
-        gens = _span_index_gens(path)
-        if not gens:
-            return {"keys": None, "generations_folded": 0}
-        merged = _span_index_counts(spark, path)
-        keys_dir = _os.path.join(path, "keys")
-        tmp = _os.path.join(path, ".keys.compact.tmp")
-        old = _os.path.join(path, ".keys.old")
-        delta_old = _os.path.join(path, ".keys_delta.old")
-        for stale in (tmp, old, delta_old):
-            _shutil.rmtree(stale, ignore_errors=True)
-        repartition_by_key(merged, "__key").write.mode("overwrite").parquet(tmp)
-        # Watermark BEFORE the swap (IVF-parity, see
-        # _compact_ivf_index_locked): crash between here and the
-        # renames leaves the delta in place and counted exactly once
-        # (the stale tmp is invisible), while a replayed generation
-        # <= watermark is skipped with its rows still in the delta —
-        # still exactly once.  After the swap the folded rows live in
-        # the base and the watermark keeps the replay out.
-        max_folded = max(int(g.split("=", 1)[1]) for g in gens)
-        meta = _span_index_meta(path)
-        if int(meta.get("folded_through_generation", -1)) < max_folded:
-            meta["folded_through_generation"] = max_folded
-            tmp_meta = _os.path.join(path, ".meta.json.tmp")
-            import json as _json
-
-            with open(tmp_meta, "w") as f:
-                _json.dump(meta, f, sort_keys=True)
-            _os.replace(tmp_meta, _os.path.join(path, "meta.json"))
-        _os.rename(keys_dir, old)
-        _os.rename(delta_dir, delta_old)
-        _os.rename(tmp, keys_dir)
-        _shutil.rmtree(old, ignore_errors=True)
-        _shutil.rmtree(delta_old, ignore_errors=True)
-        # receipt from the new base's parquet FOOTERS (driver-side
-        # metadata, no Spark job): the old read-back count() scheduled
-        # a full extra scan of the just-compacted index — at production
-        # index sizes a complete pass over the pipeline's largest
-        # artifact — for a number the footers already carry exactly
-        from pedsnetdcc_spark.util import parquet_dir_num_rows
-
-        n = parquet_dir_num_rows(keys_dir)
-        return {"keys": n, "generations_folded": len(gens)}
-
-
-def _dir_bytes(path: str) -> int:
-    import os as _os
-
-    total = 0
-    for root, _dirs, files in _os.walk(path):
-        for f in files:
-            try:
-                total += _os.path.getsize(_os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+    rename, drop the deltas.  Bounds the per-query re-aggregation the
+    way compact_ivf_index bounds the cell listing.  Crash-safe and
+    single-writer (:func:`pedsnetdcc_spark.datapipe.delta_index.compact`);
+    records ``folded_through_generation`` before the swap so a replayed
+    folded generation is a no-op.  Returns ``{"keys": n,
+    "generations_folded": g}`` (``keys`` None when nothing to fold)."""
+    return DI.compact(spark, path, _SPAN)
 
 
 def maybe_compact_span_index(
@@ -1919,56 +1686,25 @@ def maybe_compact_span_index(
     max_generations: int | None = None,
     max_delta_fraction: float | None = None,
 ) -> dict:
-    """Auto-compact policy: fold the generation deltas iff the delta
-    fan-in crossed a threshold — committed generations above
-    ``max_generations``, or delta bytes above ``max_delta_fraction`` of
-    the base ``keys/``.
-
-    Nothing else bounds the fan-in between manual compactions, and
-    every read with ANY delta present pays a full re-aggregation
-    shuffle (:func:`_span_index_counts`) — a long-running appender that
-    never compacts silently degrades every reader.  Run this after each
-    append (CLI: ``span-index --append --auto-compact-gens/--frac``)
-    and the index self-bounds: below both thresholds it is a cheap
-    listing + ``du``, above either it is exactly
-    :func:`compact_span_index` (reads before == reads after, just
-    cheaper).  Thresholds are opt-in (``None`` = unbounded) so a bulk
-    backfill can defer the fold to one final compaction."""
-    gens = _span_index_gens(path)
-    import os as _os
-
-    reason = None
-    if max_generations is not None and len(gens) > max_generations:
-        reason = f"generations {len(gens)} > {max_generations}"
-    elif max_delta_fraction is not None and gens:
-        base_b = _dir_bytes(_os.path.join(path, "keys"))
-        delta_b = _dir_bytes(_os.path.join(path, "keys_delta"))
-        if delta_b > max_delta_fraction * base_b:
-            reason = (
-                f"delta bytes {delta_b} > {max_delta_fraction} × base "
-                f"{base_b}"
-            )
-    if reason is None:
-        return {"keys": None, "generations_folded": 0, "triggered": False}
-    rep = compact_span_index(spark, path)
-    rep["triggered"] = True
-    rep["reason"] = reason
-    return rep
+    """Auto-compact policy: :func:`compact_span_index` iff committed
+    generations exceed ``max_generations`` or delta bytes exceed
+    ``max_delta_fraction`` of the base ``keys/``.  Every read with a
+    delta present pays a full re-aggregation shuffle, so run this after
+    each append (CLI: ``span-index --append --auto-compact-gens/--frac``)
+    and the index self-bounds.  Thresholds are opt-in (``None`` =
+    unbounded) so a bulk backfill can defer the fold.  Adds
+    ``triggered`` (and ``reason``) to the compaction receipt."""
+    return DI.maybe_compact(spark, path, _SPAN, max_generations,
+                            max_delta_fraction)
 
 
 def next_generation_offset(path: str) -> int:
     """The generation id a FRESH append stream must start from on an
-    index with history: one past everything ever committed — folded
-    generations via meta's ``folded_through_generation`` watermark,
-    unfolded ones via the delta listing.  Span twin of
-    :func:`pedsnetdcc_spark.datapipe.similarity.next_epoch_offset`: a
-    new checkpoint restarts Spark's epoch ids at 0, and an id at or
-    below the watermark is indistinguishable from a crash-replay —
-    without the offset it would be silently dropped (or clobber an
-    existing delta)."""
-    folded = int(_span_index_meta(path).get("folded_through_generation", -1))
-    gens = [int(g.split("=", 1)[1]) for g in _span_index_gens(path)]
-    return max([folded, *gens]) + 1
+    index with history: one past everything ever committed (folded
+    generations via ``folded_through_generation``, unfolded ones via
+    the delta listing).  A new checkpoint restarts Spark's epoch ids at
+    0, and an id at or below the watermark reads as a crash-replay."""
+    return DI.next_offset(path, _SPAN)
 
 
 def stream_span_index_append(stream: DataFrame, path: str, *,
@@ -1977,86 +1713,34 @@ def stream_span_index_append(stream: DataFrame, path: str, *,
                              checkpoint: str | None = None,
                              auto_compact_generations: int | None = None,
                              auto_compact_fraction: float | None = None):
-    """Continuous index maintenance for the span-digest index: a
-    streaming sink that folds each micro-batch of new documents into
-    the index as an atomic ``keys_delta/gen=N`` directory — the span
-    twin of :func:`pedsnetdcc_spark.datapipe.similarity.stream_ivf_index_append`,
-    with the identical epoch-identity contract.  Shingle parameters
-    come from the index's meta (a stream can never silently mix key
-    families); each micro-batch holds the ``.writer.lock`` for its
-    whole append and releases it between batches, so a compaction can
-    legally interleave with a live stream — the
-    ``folded_through_generation`` watermark keeps that interleaving
-    exactly-once (a replayed folded generation is a no-op, a replayed
-    unfolded one REPLACES its delta via the explicit tag).  Returns a
-    ``DataStreamWriter`` — caller adds trigger and ``.start()``.
+    """Continuous index maintenance: a streaming sink that folds
+    micro-batch ``e`` into the index as ``keys_delta/gen=<e +
+    generation_offset>`` — the span twin of
+    :func:`pedsnetdcc_spark.datapipe.similarity.stream_ivf_index_append`
+    (both are :func:`pedsnetdcc_spark.datapipe.delta_index.stream_sink`).
+    Returns a ``DataStreamWriter`` — caller adds trigger and
+    ``.start()``.
 
-    A stream started with a FRESH checkpoint on an index with history
-    restarts Spark's epoch ids at 0 and MUST pass
-    ``generation_offset=next_generation_offset(path)`` — fixed for the
-    checkpoint's whole lifetime, which is why it is keyword-only with
-    NO default (an explicit ``0`` for a freshly built index).  Pass
-    ``checkpoint=`` (instead of setting ``checkpointLocation``
-    yourself) to make the contract machine-checked: the offset is
-    persisted as ``_span_generation_offset.json`` inside the
-    checkpoint dir on first wiring and validated on every restart, so
-    a colliding fresh lineage — or a restart with a different offset
-    or against a different index — raises at wiring time instead of
-    silently losing batches.  Wiring also registers the checkpoint as
-    the index's ONE live append lineage
-    (:func:`pedsnetdcc_spark.util.register_live_lineage`): a second
-    stream wired later supersedes this one, whose next micro-batch
-    then fails loudly with
-    :class:`~pedsnetdcc_spark.util.StreamLineageSuperseded` instead of
-    silently clobbering generations whose ids collide.
+    ``generation_offset`` is keyword-only with NO default: a fresh
+    checkpoint on an index with history must pass
+    ``next_generation_offset(path)`` (``0`` for a freshly built index),
+    fixed for the checkpoint's life.  Pass ``checkpoint=`` to make that
+    machine-checked (persisted as ``_span_generation_offset.json`` in
+    the checkpoint, validated on every restart) and to register the
+    stream as the index's one live lineage — a later wiring supersedes
+    it, and its next batch fails with
+    :class:`~pedsnetdcc_spark.util.StreamLineageSuperseded`.
 
-    SELF-BOUNDING INGESTION: pass ``auto_compact_generations`` /
-    ``auto_compact_fraction`` to run
-    :func:`maybe_compact_span_index` after each micro-batch — a
-    never-compacted appender otherwise puts every reader on the
-    re-aggregation path forever.  The fold runs between the batch's
-    append lock release and the next batch (its own lock), the
-    watermark keeps any crash-replay across it exactly-once, and the
-    thresholds make it a cheap listing when nothing crossed them."""
-    from pedsnetdcc_spark.util import validate_stream_offset
-
-    def _append(batch_df: DataFrame, epoch_id: int) -> None:
-        append_span_index(
-            batch_df, path, text_col=text_col,
-            generation=epoch_id + generation_offset,
-            live_lineage_checkpoint=checkpoint,
-        )
-        if (auto_compact_generations is not None
-                or auto_compact_fraction is not None):
-            maybe_compact_span_index(
-                batch_df.sparkSession, path,
-                max_generations=auto_compact_generations,
-                max_delta_fraction=auto_compact_fraction,
-            )
-
-    writer = stream.writeStream.foreachBatch(_append).outputMode("append")
-    if checkpoint is not None:
-        # validate + register under the writer lock so two simultaneous
-        # wirings serialize; registering makes THIS checkpoint the
-        # index's one live append lineage (superseding any previous —
-        # the superseded stream fails loudly at its next batch)
-        from pedsnetdcc_spark.util import (
-            index_writer_lock,
-            register_live_lineage,
-        )
-
-        with index_writer_lock(path, "wire-lineage"):
-            validate_stream_offset(
-                path, checkpoint, generation_offset,
-                marker_name="_span_generation_offset.json",
-                offset_key="generation_offset",
-                frontier_noun="generation",
-                required=next_generation_offset(path),
-                hint="pass generation_offset=next_generation_offset(path)",
-            )
-            register_live_lineage(path, checkpoint)
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    ``auto_compact_generations`` / ``auto_compact_fraction`` run
+    :func:`maybe_compact_span_index` after each micro-batch; the
+    watermark keeps a crash-replay across a fold exactly-once."""
+    return DI.stream_sink(
+        stream, path, _SPAN,
+        lambda batch, meta: _span_counts(batch, meta, text_col),
+        offset=generation_offset, checkpoint=checkpoint,
+        auto_compact_deltas=auto_compact_generations,
+        auto_compact_fraction=auto_compact_fraction,
+    )
 
 
 def duplicate_spans_against_index(
@@ -2080,10 +1764,10 @@ def duplicate_spans_against_index(
     index side arrives key-clustered from the build/compact write.
 
     Opening an index whose compaction crashed performs recovery WRITES
-    (:func:`_recover_span_compaction`); on a read-only mount pass
+    (:func:`pedsnetdcc_spark.datapipe.delta_index.recover_compaction`); on a read-only mount pass
     ``recover=False`` to raise loudly instead."""
     spark = df.sparkSession
-    meta = _span_index_meta(path)
+    meta = DI.read_meta(path)
     k, sep, digest = meta["k"], meta["sep"], meta["digest"]
     id_col = meta["id_col"]
     toks = df.select(
@@ -2136,7 +1820,7 @@ def drop_duplicate_spans_against_index(
     span_start, span_end)`` with spans derived under the index's
     ``sep``/``k`` and this call's ``min_count``; a mismatched spans
     table silently produces wrong dedup output (advice r13)."""
-    meta = _span_index_meta(path)
+    meta = DI.read_meta(path)
     sep = meta["sep"]
     id_col = meta["id_col"]
     if spans is None:

@@ -24,11 +24,15 @@ FLAT across 2k→2M vectors, SCALE.md round 10).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pedsnetdcc_spark.datapipe import delta_index as DI
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -862,6 +866,91 @@ def ivf_topk(
     )
 
 
+def _load_codebooks(path: str, meta: dict):
+    """The index's FROZEN cell codebook and, on an IVF-PQ index, its PQ
+    codebooks — driver-side pyarrow reads (no Spark job; the streaming
+    append pays them every micro-batch)."""
+    crows = _read_codebook_rows(
+        os.path.join(path, "centroids.parquet"), ["centroid_id"]
+    )
+    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    pq_cb = None
+    if meta.get("pq_m"):
+        pq_rows = _read_codebook_rows(
+            os.path.join(path, "pq_codebooks.parquet"), ["subspace", "code"]
+        )
+        pq_cb = np.array(
+            [r["centroid"] for r in pq_rows], dtype=np.float64
+        ).reshape(meta["pq_m"], meta["pq_codebook_size"], -1)
+    return C, pq_cb
+
+
+def _assign_cells(df: DataFrame, meta: dict, C, pq_cb) -> DataFrame:
+    """IVF layout rows of ``df``: each vector with its cell under
+    codebook ``C`` (hierarchical assignment past 64 cells when the
+    index was built that way) and, given ``pq_cb``, its PQ codes."""
+    import math
+
+    if meta["assign"] == "hierarchical" and len(C) >= 64:
+        assign_cell, _ = _hier_assign_udf(
+            C, k1=math.ceil(math.sqrt(len(C))),
+            iters=meta["iters"], seed=meta["seed"],
+        )
+    else:
+        assign_cell, _ = _cell_assign_udfs(C, nprobe=1)
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    assigned = df.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias(vec_col),
+    ).withColumn("centroid_id", assign_cell(F.col(vec_col)))
+    if pq_cb is None:
+        return assigned
+    return pq_encode(assigned, pq_cb, id_col, vec_col)
+
+
+def _ivf_receipt(cells_dir: str | None, folded: int) -> dict:
+    """Compaction receipt from the new base's LAYOUT (driver-side, no
+    Spark job): the distinct-cell count is the ``centroid_id=N``
+    partition listing (Spark creates a dir only for rows that exist;
+    the ``__HIVE_DEFAULT_PARTITION__`` a null cell would create is not
+    counted, as ``countDistinct`` never counted NULL) and the row total
+    is the sum of the parquet footers' ``num_rows``."""
+    if cells_dir is None:
+        return {"cells": None, "rows": None, "epochs_folded": 0}
+    from pyarrow import fs as _pafs
+
+    from pedsnetdcc_spark.util import parquet_dir_num_rows, pyarrow_fs_and_path
+
+    cfs, croot = pyarrow_fs_and_path(cells_dir)
+    n_cells = sum(
+        1
+        for info in cfs.get_file_info(_pafs.FileSelector(croot))
+        if info.type == _pafs.FileType.Directory
+        and info.base_name.startswith("centroid_id=")
+        and info.base_name != "centroid_id=__HIVE_DEFAULT_PARTITION__"
+    )
+    return {
+        "cells": n_cells,
+        "rows": parquet_dir_num_rows(cells_dir),
+        "epochs_folded": folded,
+    }
+
+
+_IVF = DI.Layout(
+    name="an IVF index",
+    family="ivf",
+    base="cells",
+    delta_key="epoch",
+    id_width=6,
+    noun="epoch",
+    offset_marker="_ivf_epoch_offset.json",
+    cluster_key="centroid_id",
+    partitioned=True,
+    merge=DataFrame.unionByName,
+    receipt=_ivf_receipt,
+)
+
+
 def build_ivf_index(
     df: DataFrame,
     path: str,
@@ -887,7 +976,8 @@ def build_ivf_index(
 
         centroids.parquet            (centroid_id, centroid)  — k rows
         cells/centroid_id=N/*.parquet  (id, vector)           — the corpus
-        meta.json                    (dim, n, params)
+        cells_delta/epoch=NNNNNN/...   streaming appends
+        meta.json                    (dim, n, params, folded_through_epoch)
 
     The partition layout is the index: a query batch probing ``nprobe``
     cells reads ONLY those directories (Spark partition pruning — the
@@ -903,43 +993,18 @@ def build_ivf_index(
     assignment lifts the 1024-cell cap; ``n=`` skips the count).
     Returns the meta dict (also persisted as ``meta.json``).
 
-    Building REPLACES the index wholesale (matching
-    ``dedup.build_span_index``, round 12): any existing cells,
-    streaming epoch deltas, compaction debris, codebooks, and meta at
-    ``path`` are removed first — otherwise a rebuild would leave stale
-    ``cells_delta`` epochs (assigned under the OLD codebook) for the
-    next open to union with the new base, quietly corrupting counts
-    and recall.  A ``path`` that exists, is non-empty, and does not
-    look like an IVF index is REFUSED unless ``force=True``, so
-    transposed arguments cannot silently delete a data directory.
-
-    SINGLE-WRITER: holds the index's ``.writer.lock``
-    (:func:`pedsnetdcc_spark.util.index_writer_lock`) for the whole
-    replace, so a concurrent build/append/compact fails immediately
-    with :class:`~pedsnetdcc_spark.util.IndexWriterLocked` instead of
-    racing the replace window."""
-    import json as _json
+    Building REPLACES the index wholesale (cells, epoch deltas assigned
+    under the old codebook, codebooks, watermark), refuses a non-empty
+    ``path`` that does not look like an IVF index unless
+    ``force=True``, and holds the index's ``.writer.lock`` throughout
+    (:func:`pedsnetdcc_spark.datapipe.delta_index.build`)."""
     import math
-    import os as _os
-
-    from pedsnetdcc_spark.util import clear_index_children, index_writer_lock
 
     if assign not in ("flat", "hierarchical"):
         raise ValueError(f"unknown assign mode {assign!r}")
-    if _os.path.isdir(path) and _os.listdir(path):
-        looks_like_index = any(
-            _os.path.exists(_os.path.join(path, p))
-            for p in ("meta.json", "cells", ".cells.compact.tmp",
-                      ".writer.lock")
-        )
-        if not looks_like_index and not force:
-            raise ValueError(
-                f"refusing to replace {path!r}: it exists, is non-empty, "
-                "and does not look like an IVF index (no meta.json). "
-                "Pass force=True (CLI: --force) to overwrite it anyway."
-            )
-    with index_writer_lock(path, "build"):
-        clear_index_children(path)
+
+    def populate() -> dict:
+        nonlocal n, n_centroids, sample_size
         # one count action for the whole build (stats seam): auto
         # sizing, the cell trainer's sampler, and the PQ trainer's
         # sampler all reuse it — before the seam an IVF-PQ build
@@ -963,59 +1028,6 @@ def build_ivf_index(
                 df, id_col, vec_col, k=int(n_centroids),
                 sample_size=sample_size, iters=iters, seed=seed, n=n,
             )
-        spark = df.sparkSession
-        if assign == "hierarchical" and len(C) >= 64:
-            assign_cell, _ = _hier_assign_udf(
-                C, k1=math.ceil(math.sqrt(len(C))), iters=iters, seed=seed
-            )
-        else:
-            assign_cell, _ = _cell_assign_udfs(C, nprobe=1)
-        from pedsnetdcc_spark.util import repartition_by_key
-
-        assigned = (
-            df.select(
-                F.col(id_col),
-                F.col(vec_col).cast("array<double>").alias(vec_col),
-            )
-            .withColumn("centroid_id", assign_cell(F.col(vec_col)))
-        )
-        if pq_m is not None:
-            # IVF-PQ: store each vector's PQ codes IN the cells so a query
-            # batch's coarse (ADC) stage reads m small ints per row instead
-            # of the full vector — column pruning turns the pruned-cell
-            # scan into a ~dim/m-times-smaller read; the exact re-rank
-            # fetches real vectors only for the shortlist.
-            pq_cb = train_pq_codebooks(
-                df, id_col, vec_col, m=pq_m, codebook_size=pq_codebook_size,
-                sample_size=sample_size, iters=iters, seed=seed + 1, n=n,
-            )
-            assigned = pq_encode(assigned, pq_cb, id_col, vec_col)
-            cb_rows = [
-                (j, c, [float(x) for x in pq_cb[j, c]])
-                for j in range(pq_cb.shape[0])
-                for c in range(pq_cb.shape[1])
-            ]
-            # the codebook already lives on the driver — write it with
-            # pyarrow (no round trip through createDataFrame + a Spark
-            # write job; round 13, replacing the repartition(1) form)
-            _write_codebook_parquet(
-                cb_rows,
-                "subspace int, code int, centroid array<double>",
-                _os.path.join(path, "pq_codebooks.parquet"),
-            )
-        # cluster rows by cell BEFORE the partitioned write: without this,
-        # every write task emits a file into every cell directory it holds
-        # rows for (tasks × cells small files); hashed on centroid_id, each
-        # cell's rows land in exactly one task → one file per cell
-        repartition_by_key(assigned, "centroid_id").write.mode(
-            "overwrite"
-        ).partitionBy("centroid_id").parquet(_os.path.join(path, "cells"))
-        # driver-side pyarrow write, like the PQ codebook above
-        _write_codebook_parquet(
-            [(i, [float(x) for x in row]) for i, row in enumerate(C)],
-            "centroid_id int, centroid array<double>",
-            _os.path.join(path, "centroids.parquet"),
-        )
         meta = {
             "id_col": id_col,
             "vec_col": vec_col,
@@ -1027,14 +1039,39 @@ def build_ivf_index(
             "pq_m": pq_m,
             "pq_codebook_size": pq_codebook_size if pq_m is not None else None,
         }
-        # atomic meta commit (tmp + replace), matching build_span_index
-        # and the compaction watermark: a crash mid-write must leave
-        # no truncated meta.json behind
-        tmp_meta = _os.path.join(path, ".meta.json.tmp")
-        with open(tmp_meta, "w") as f:
-            _json.dump(meta, f, sort_keys=True)
-        _os.replace(tmp_meta, _os.path.join(path, "meta.json"))
+        pq_cb = None
+        if pq_m is not None:
+            # IVF-PQ: store each vector's PQ codes IN the cells so a query
+            # batch's coarse (ADC) stage reads m small ints per row instead
+            # of the full vector — column pruning turns the pruned-cell
+            # scan into a ~dim/m-times-smaller read; the exact re-rank
+            # fetches real vectors only for the shortlist.
+            pq_cb = train_pq_codebooks(
+                df, id_col, vec_col, m=pq_m, codebook_size=pq_codebook_size,
+                sample_size=sample_size, iters=iters, seed=seed + 1, n=n,
+            )
+            # the codebooks already live on the driver — written with
+            # pyarrow, no Spark job
+            _write_codebook_parquet(
+                [(j, c, [float(x) for x in pq_cb[j, c]])
+                 for j in range(pq_cb.shape[0])
+                 for c in range(pq_cb.shape[1])],
+                "subspace int, code int, centroid array<double>",
+                os.path.join(path, "pq_codebooks.parquet"),
+            )
+        # clustered by cell before the partitioned write: one file per
+        # cell instead of tasks × cells small files
+        DI.write_layout(
+            _assign_cells(df, meta, C, pq_cb), os.path.join(path, "cells"), _IVF
+        )
+        _write_codebook_parquet(
+            [(i, [float(x) for x in row]) for i, row in enumerate(C)],
+            "centroid_id int, centroid array<double>",
+            os.path.join(path, "centroids.parquet"),
+        )
         return meta
+
+    return DI.build(path, _IVF, force, populate)
 
 
 class _ProbeAssignment:
@@ -1067,48 +1104,17 @@ class IvfIndexHandle:
     paid once per process, not per query."""
 
     def __init__(self, spark, path: str, recover: bool = True):
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(path, "meta.json")) as f:
-            self.meta = _json.load(f)
+        self.meta = DI.read_meta(path)
         # driver-side pyarrow reads (no Spark jobs) — the codebooks are
         # kilobytes and end up on the driver either way
-        crows = _read_codebook_rows(
-            _os.path.join(path, "centroids.parquet"), ["centroid_id"]
-        )
-        self.centroids = np.array(
-            [r["centroid"] for r in crows], dtype=np.float64
-        )
-        self.pq_codebooks = None
-        if self.meta.get("pq_m"):
-            pq_rows = _read_codebook_rows(
-                _os.path.join(path, "pq_codebooks.parquet"),
-                ["subspace", "code"],
-            )
-            m = self.meta["pq_m"]
-            k = self.meta["pq_codebook_size"]
-            self.pq_codebooks = np.array(
-                [r["centroid"] for r in pq_rows], dtype=np.float64
-            ).reshape(m, k, -1)
+        self.centroids, self.pq_codebooks = _load_codebooks(path, self.meta)
         # ONE listing; the FileIndex (and its partition spec) is cached
-        # on this DataFrame and reused by every query plan.  (A
-        # compaction that crashed between its renames is rolled forward
-        # first — see _recover_ivf_compaction; note this means an OPEN
-        # can perform recovery writes — pass recover=False on a
-        # read-only mount to raise loudly instead.)
-        _recover_ivf_compaction(path, recover=recover)
-        self.cells = spark.read.parquet(_os.path.join(path, "cells"))
-        delta = _os.path.join(path, "cells_delta")
-        if _committed_epochs(delta):
-            # streaming appends (stream_ivf_index_append): union the
-            # epoch deltas in; the centroid_id filter pushes through
-            # the union, so BOTH sides stay partition-pruned.  A delta
-            # holding only a crashed batch's orphan temp is skipped:
-            # schema inference fails on a directory with no epoch.
-            self.cells = self.cells.unionByName(
-                spark.read.parquet(delta).drop("epoch")
-            )
+        # on this DataFrame and reused by every query plan.  Committed
+        # epoch deltas are unioned in — the centroid_id filter pushes
+        # through the union, so BOTH sides stay partition-pruned.  A
+        # crashed compaction is rolled forward first, so an OPEN can
+        # perform recovery writes (recover=False raises instead).
+        self.cells = DI.read(spark, path, _IVF, recover=recover)
 
     def probe_assignments(
         self,
@@ -1355,173 +1361,20 @@ def query_ivf_index(
 def _append_ivf_epoch(batch_df: DataFrame, epoch_id: int, path: str,
                       live_lineage_checkpoint: str | None = None) -> None:
     """One micro-batch of new vectors → one atomic
-    ``cells_delta/epoch=NNNNNN`` directory, cell-partitioned like the
-    base layout.  Write-to-temp + rename, so a replayed epoch REPLACES
-    its partial output instead of appending duplicates (the
-    exactly-once pattern of the streaming WebDataset export).
-
-    A compaction that crashed in its no-``cells/`` window is rolled
-    forward FIRST (:func:`_recover_ivf_compaction`) — otherwise this
-    epoch could land in a ``cells_delta`` whose contents the next
-    open's recovery is contractually required to delete, silently
-    losing the epoch.  SINGLE-WRITER contract (ENFORCED per epoch):
-    each micro-batch holds the index's ``.writer.lock``
-    (:func:`pedsnetdcc_spark.util.index_writer_lock`) for its whole
-    write+rename, so a concurrent compaction/build/second-stream epoch
-    fails immediately with
-    :class:`~pedsnetdcc_spark.util.IndexWriterLocked` instead of
-    racing; BETWEEN epochs the lock is released, so a compaction can
-    legally interleave with a live stream (the watermark below keeps
-    that interleaving exactly-once).  Within ONE stream the checkpoint
-    serializes epoch numbering and a replayed epoch must REPLACE its
-    partial output (hence the pre-rename rmtree of ``final``); that
-    same replacement semantics means a SECOND independent stream
-    pointed at the index clobbers the first's epochs whenever their
-    ids collide.  For checkpoint-routed streams this is now ENFORCED,
-    not convention: pass ``live_lineage_checkpoint`` (the sink does)
-    and the batch asserts — inside this same lock — that its
-    checkpoint is still the index's ONE registered live lineage
-    (:func:`pedsnetdcc_spark.util.assert_live_lineage`); wiring a new
-    lineage supersedes the old, whose next batch fails loudly with
-    :class:`~pedsnetdcc_spark.util.StreamLineageSuperseded` instead of
-    silently interleaving ids.
-
-    A replayed epoch at or below meta's ``folded_through_epoch``
-    watermark is a NO-OP: a compaction already folded its rows into
-    the base (legal between a stream crash and its restart), so
-    re-writing the delta would double-count — see
-    :func:`compact_ivf_index`.
-
-    An EMPTY micro-batch commits nothing (early return): an
-    ``epoch=N`` directory holding zero parquet files would make
-    ``spark.read.parquet(cells_delta)`` schema inference fragile if
-    every sibling epoch were also empty, and there is nothing to
-    replay-protect — the checkpoint still advances."""
-    from pedsnetdcc_spark.util import assert_live_lineage, index_writer_lock
-
-    with index_writer_lock(path, "append-epoch"):
-        if live_lineage_checkpoint is not None:
-            # streaming sink's liveness guard (checked INSIDE the lock,
-            # registration happens under the same lock): a superseded
-            # stream fails loudly here instead of committing an epoch
-            # whose id range collides with its successor's
-            assert_live_lineage(path, live_lineage_checkpoint)
-        _append_ivf_epoch_locked(batch_df, epoch_id, path)
-
-
-def _append_ivf_epoch_locked(
-    batch_df: DataFrame, epoch_id: int, path: str
-) -> None:
-    import json as _json
-    import math
-    import os as _os
-    import shutil as _shutil
-
-    from pedsnetdcc_spark.util import repartition_by_key
-
-    _recover_ivf_compaction(path)
-    with open(_os.path.join(path, "meta.json")) as f:
-        meta = _json.load(f)
-    if epoch_id <= meta.get("folded_through_epoch", -1):
-        # a compaction already folded this epoch into the base between
-        # the original commit and this replay (stream crashed before
-        # its checkpoint committed) — re-writing it would double-count
-        # every row next to its folded copy; the replay is a no-op
-        return
-    # (Emptiness is decided AFTER the tmp write from the parquet
-    # footers — the span-index append's pattern — instead of a
-    # pre-write isEmpty(), which scheduled one extra scan job on EVERY
-    # micro-batch to protect against the rare empty one; round-14.)
-    # frozen codebooks, read driver-side (pyarrow — no Spark job): the
-    # stream pays this read EVERY micro-batch
-    crows = _read_codebook_rows(
-        _os.path.join(path, "centroids.parquet"), ["centroid_id"]
+    ``cells_delta/epoch=NNNNNN`` directory, cell-assigned with the
+    index's FROZEN codebooks and cell-partitioned like the base.  The
+    commit is :func:`pedsnetdcc_spark.datapipe.delta_index.append`
+    with an explicit tag: a replayed epoch REPLACES its partial output,
+    one at or below ``folded_through_epoch`` is a no-op, an empty batch
+    commits nothing, and the batch holds the ``.writer.lock`` for its
+    whole write+rename (released between epochs, so a compaction may
+    interleave).  ``live_lineage_checkpoint`` asserts, inside the lock,
+    that the stream is still the index's live lineage."""
+    DI.append(
+        batch_df, path, _IVF, epoch_id,
+        lambda df, meta: _assign_cells(df, meta, *_load_codebooks(path, meta)),
+        live_lineage_checkpoint=live_lineage_checkpoint,
     )
-    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    if meta["assign"] == "hierarchical" and len(C) >= 64:
-        assign_cell, _ = _hier_assign_udf(
-            C, k1=math.ceil(math.sqrt(len(C))),
-            iters=meta["iters"], seed=meta["seed"],
-        )
-    else:
-        assign_cell, _ = _cell_assign_udfs(C, nprobe=1)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    assigned = batch_df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
-    ).withColumn("centroid_id", assign_cell(F.col(vec_col)))
-    if meta.get("pq_m"):
-        # frozen PQ codebooks, like the frozen cell codebook above
-        pq_rows = _read_codebook_rows(
-            _os.path.join(path, "pq_codebooks.parquet"), ["subspace", "code"]
-        )
-        pq_cb = np.array(
-            [r["centroid"] for r in pq_rows], dtype=np.float64
-        ).reshape(meta["pq_m"], meta["pq_codebook_size"], -1)
-        assigned = pq_encode(assigned, pq_cb, id_col, vec_col)
-    final = _os.path.join(path, "cells_delta", f"epoch={epoch_id:06d}")
-    # dot-prefixed temp: Spark's partition discovery IGNORES dot/underscore
-    # paths, so an orphaned temp from a crashed epoch can never be read
-    # as a bogus `epoch=...tmp` partition value
-    tmp = _os.path.join(
-        _os.path.dirname(final), f".tmp-epoch-{epoch_id:06d}"
-    )
-    _shutil.rmtree(tmp, ignore_errors=True)
-    repartition_by_key(assigned, "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(tmp)
-    from pedsnetdcc_spark.util import parquet_dir_num_rows
-
-    if parquet_dir_num_rows(tmp) == 0:
-        # empty micro-batch: commit nothing (an all-empty epoch dir is
-        # the one delta state spark.read.parquet can fail schema
-        # inference on, and there is nothing to replay-protect — the
-        # checkpoint still advances).  Decided from the written tmp's
-        # footers (driver-side, no job) instead of a pre-write
-        # isEmpty() scan job every batch paid.  The tmp write may have
-        # created the cells_delta parent as a side effect — drop it
-        # again if this left it empty, or the next open would schema-
-        # infer over a contentless delta dir (we hold the writer lock,
-        # so no concurrent epoch can be mid-commit here).
-        _shutil.rmtree(tmp, ignore_errors=True)
-        delta_parent = _os.path.dirname(final)
-        if _os.path.isdir(delta_parent) and not _os.listdir(delta_parent):
-            _os.rmdir(delta_parent)
-        return
-    _shutil.rmtree(final, ignore_errors=True)
-    _os.makedirs(_os.path.dirname(final), exist_ok=True)
-    _os.rename(tmp, final)
-
-
-def _recover_ivf_compaction(path: str, recover: bool = True) -> None:
-    """Roll a crashed compaction FORWARD: if ``cells/`` is missing but
-    the fully-written ``.cells.compact.tmp`` exists (the temp is always
-    complete before the base moves aside), finish the swap and drop the
-    delta — whichever name the crash left it under; the temp already
-    contains every epoch, so removing it can never lose data and
-    keeping it would double-count.  EVERY lifecycle entry point (open,
-    epoch append, compact) runs this first, so no writer can commit an
-    epoch into a delta dir a later recovery would delete.
-
-    ``recover=False`` (for read-only mounts) raises instead of
-    mutating when the crashed state is present."""
-    import os as _os
-    import shutil as _shutil
-
-    cells_dir = _os.path.join(path, "cells")
-    tmp = _os.path.join(path, ".cells.compact.tmp")
-    if _os.path.isdir(cells_dir) or not _os.path.isdir(tmp):
-        return
-    if not recover:
-        raise RuntimeError(
-            f"IVF index at {path!r} has a crashed compaction (cells/ "
-            "missing, .cells.compact.tmp complete) and recover=False was "
-            "requested; run compact_ivf_index (or open with recover=True) "
-            "on a writable mount to roll the swap forward"
-        )
-    _os.rename(tmp, cells_dir)
-    for leftover in (".cells.old", "cells_delta", ".cells_delta.old"):
-        _shutil.rmtree(_os.path.join(path, leftover), ignore_errors=True)
 
 
 def compact_ivf_index(spark, path: str) -> dict:
@@ -1532,111 +1385,13 @@ def compact_ivf_index(spark, path: str) -> dict:
     Assignments are already consistent (the append path froze the
     codebook), so compaction is pure layout maintenance: it bounds the
     handle's listing cost (epochs × cells directories shrink back to
-    cells) and restores one-file-per-cell reads.  Crash-safety
-    contract (matched with dedup.compact_span_index, round 11): the
-    folded layout is FULLY written to a dot-prefixed temp before
-    anything moves, and the delta dir is renamed aside BEFORE the temp
-    lands — so no reachable crash state double-counts an epoch (the
-    temp already contains it) or loses one; the single no-``cells/``
-    window is rolled forward by the next open/compact.
-
-    Streaming-replay seam (round-12 review finding): a stream can
-    crash AFTER its epoch's delta landed but BEFORE the checkpoint
-    committed; if a compaction folds that epoch before the stream
-    restarts, the replay would re-write the epoch's rows NEXT TO their
-    folded copies — double-counting.  Compaction therefore records the
-    highest epoch id it folded in ``meta.json`` (atomic replace,
-    BEFORE any rename so every crash state is covered), and
-    :func:`_append_ivf_epoch` drops a replayed epoch at or below that
-    watermark as an idempotent no-op.  Single-writer contract
-    (ENFORCED via ``.writer.lock``; a live stream's epochs interleave
-    legally because the sink holds the lock per-epoch, not
-    per-stream): see :func:`_append_ivf_epoch`.  Returns
-    ``{"cells": n, "rows": m, "epochs_folded": e}``."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from pedsnetdcc_spark.util import index_writer_lock, repartition_by_key
-
-    with index_writer_lock(path, "compact"):
-        return _compact_ivf_index_locked(spark, path)
-
-
-def _compact_ivf_index_locked(spark, path: str) -> dict:
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from pedsnetdcc_spark.util import repartition_by_key
-
-    _recover_ivf_compaction(path)
-    cells_dir = _os.path.join(path, "cells")
-    delta_dir = _os.path.join(path, "cells_delta")
-    epochs = _committed_epochs(delta_dir)
-    if not epochs:
-        return {"cells": None, "rows": None, "epochs_folded": 0}
-    base = spark.read.parquet(cells_dir)
-    delta = spark.read.parquet(delta_dir).drop("epoch")
-    merged = base.unionByName(delta)
-    tmp = _os.path.join(path, ".cells.compact.tmp")
-    old = _os.path.join(path, ".cells.old")
-    delta_old = _os.path.join(path, ".cells_delta.old")
-    for stale in (tmp, old, delta_old):
-        _shutil.rmtree(stale, ignore_errors=True)
-    repartition_by_key(merged, "centroid_id").write.mode(
-        "overwrite"
-    ).partitionBy("centroid_id").parquet(tmp)
-    # Watermark BEFORE the swap: if we crash between here and the
-    # renames, the delta is still in place and counted exactly once
-    # (the stale tmp is invisible), and a replayed epoch <= watermark
-    # is skipped while its rows still live in the delta — still
-    # exactly once.  After the swap the folded rows live in the base
-    # and the watermark keeps the replay out.
-    max_folded = max(epochs)
-    meta_path = _os.path.join(path, "meta.json")
-    with open(meta_path) as f:
-        meta = _json.load(f)
-    if meta.get("folded_through_epoch", -1) < max_folded:
-        meta["folded_through_epoch"] = max_folded
-        tmp_meta = _os.path.join(path, ".meta.json.tmp")
-        with open(tmp_meta, "w") as f:
-            _json.dump(meta, f, sort_keys=True)
-        _os.replace(tmp_meta, meta_path)
-    _os.rename(cells_dir, old)
-    _os.rename(delta_dir, delta_old)
-    _os.rename(tmp, cells_dir)
-    _shutil.rmtree(old, ignore_errors=True)
-    _shutil.rmtree(delta_old, ignore_errors=True)
-    # receipt counts from the new base's LAYOUT (driver-side, no Spark
-    # job; was one aggregate job, before that two full scans): the
-    # cells are hive-partitioned by centroid_id, so the distinct-cell
-    # count is the partition-directory listing — Spark only creates a
-    # centroid_id=N dir for rows that exist, so listing == the data's
-    # countDistinct — and the row total is the sum of the parquet
-    # footers' num_rows.  A read-back scan of the just-compacted index
-    # paid a full extra pass over it for numbers its metadata carries.
-    # The listing goes through pyarrow.fs (round-14: scheme-dispatch,
-    # same coverage as a Spark listing) and EXCLUDES the
-    # __HIVE_DEFAULT_PARTITION__ dir a null centroid_id would create —
-    # the countDistinct this replaced never counted NULL (advice r13).
-    from pedsnetdcc_spark.util import parquet_dir_num_rows, pyarrow_fs_and_path
-
-    _cfs, _croot = pyarrow_fs_and_path(cells_dir)
-    from pyarrow import fs as _pafs
-
-    n_cells = sum(
-        1
-        for info in _cfs.get_file_info(_pafs.FileSelector(_croot))
-        if info.type == _pafs.FileType.Directory
-        and info.base_name.startswith("centroid_id=")
-        and info.base_name != "centroid_id=__HIVE_DEFAULT_PARTITION__"
-    )
-    return {
-        "cells": n_cells,
-        "rows": parquet_dir_num_rows(cells_dir),
-        "epochs_folded": len(epochs),
-    }
+    cells) and restores one-file-per-cell reads.  Crash-safe and
+    single-writer (:func:`pedsnetdcc_spark.datapipe.delta_index.compact`):
+    ``folded_through_epoch`` is recorded before the swap, so a stream
+    replaying an epoch this folded skips it.  Returns ``{"cells": n,
+    "rows": m, "epochs_folded": e}`` (``None`` counts when nothing to
+    fold)."""
+    return DI.compact(spark, path, _IVF)
 
 
 def maybe_compact_ivf_index(
@@ -1650,34 +1405,10 @@ def maybe_compact_ivf_index(
     fold the epoch deltas iff committed epochs exceed ``max_epochs`` or
     delta bytes exceed ``max_delta_fraction`` of the base ``cells/``.
     Bounds the handle's open-time directory listing (epochs × cells
-    dirs) and restores one-file-per-cell reads without requiring an
-    operator to schedule compaction by hand (CLI: ``ann-compact
-    --if-epochs-over / --if-frac-over``).  Thresholds are opt-in
-    (``None`` = unbounded)."""
-    import os as _os
-
-    from pedsnetdcc_spark.datapipe.dedup import _dir_bytes
-
-    delta = _os.path.join(path, "cells_delta")
-    epochs = _committed_epochs(delta)
-    reason = None
-    if max_epochs is not None and len(epochs) > max_epochs:
-        reason = f"epochs {len(epochs)} > {max_epochs}"
-    elif max_delta_fraction is not None and epochs:
-        base_b = _dir_bytes(_os.path.join(path, "cells"))
-        delta_b = _dir_bytes(delta)
-        if delta_b > max_delta_fraction * base_b:
-            reason = (
-                f"delta bytes {delta_b} > {max_delta_fraction} × base "
-                f"{base_b}"
-            )
-    if reason is None:
-        return {"cells": None, "rows": None, "epochs_folded": 0,
-                "triggered": False}
-    rep = compact_ivf_index(spark, path)
-    rep["triggered"] = True
-    rep["reason"] = reason
-    return rep
+    dirs) without requiring an operator to schedule compaction by hand
+    (CLI: ``ann-compact --if-epochs-over / --if-frac-over``).
+    Thresholds are opt-in (``None`` = unbounded)."""
+    return DI.maybe_compact(spark, path, _IVF, max_epochs, max_delta_fraction)
 
 
 def next_epoch_offset(path: str) -> int:
@@ -1687,53 +1418,8 @@ def next_epoch_offset(path: str) -> int:
     the delta listing).  A new checkpoint restarts Spark's epoch ids
     at 0, and an id at or below the watermark is indistinguishable
     from a crash-replay — without the offset it would be silently
-    dropped (or, pre-watermark, silently clobber an existing delta)."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "meta.json")) as f:
-        folded = _json.load(f).get("folded_through_epoch", -1)
-    return max([folded, *_committed_epochs(_os.path.join(path, "cells_delta"))]) + 1
-
-
-def _committed_epochs(delta: str) -> list[int]:
-    """Epoch ids committed under an IVF index's ``cells_delta`` (its
-    ``epoch=*`` children; an in-flight or orphaned ``.tmp-epoch-*`` is
-    not one)."""
-    import os as _os
-
-    if not _os.path.isdir(delta):
-        return []
-    return [int(e.split("=", 1)[1]) for e in _os.listdir(delta) if e.startswith("epoch=")]
-
-
-def _validate_lineage_offset(path: str, checkpoint: str,
-                             epoch_offset: int) -> None:
-    """Persist-and-validate a stream lineage's epoch offset next to its
-    checkpoint, so a colliding fresh lineage RAISES instead of silently
-    losing batches.
-
-    First wiring of a checkpoint (no marker): the offset must be at
-    least :func:`next_epoch_offset` — a fresh lineage restarts Spark's
-    epoch ids at 0, so an offset below the index's committed frontier
-    would drop epochs ≤ ``folded_through_epoch`` as phantom replays and
-    clobber live deltas.  The offset is then written to
-    ``_ivf_epoch_offset.json`` in the checkpoint dir (atomic replace;
-    Spark ignores foreign files there).  Every later wiring of the SAME
-    checkpoint must pass the SAME offset against the SAME index — the
-    offset is part of the lineage's identity for its whole lifetime.
-    (Shared core: :func:`pedsnetdcc_spark.util.validate_stream_offset`,
-    also used by the span index's generation-offset twin.)"""
-    from pedsnetdcc_spark.util import validate_stream_offset
-
-    validate_stream_offset(
-        path, checkpoint, epoch_offset,
-        marker_name="_ivf_epoch_offset.json",
-        offset_key="epoch_offset",
-        frontier_noun="epoch",
-        required=next_epoch_offset(path),
-        hint="pass epoch_offset=next_epoch_offset(path)",
-    )
+    dropped (or clobber an existing delta)."""
+    return DI.next_offset(path, _IVF)
 
 
 def stream_ivf_index_append(stream: DataFrame, path: str, *,
@@ -1744,76 +1430,44 @@ def stream_ivf_index_append(stream: DataFrame, path: str, *,
     """Continuous index maintenance: a streaming sink that assigns each
     micro-batch of new vectors to cells with the index's FROZEN codebook
     and lands it as an atomic ``cells_delta/epoch=NNNNNN`` directory —
-    the base+delta (LSM-style) growth path of :func:`build_ivf_index`.
+    the base+delta (LSM-style) growth path of :func:`build_ivf_index`
+    (:func:`pedsnetdcc_spark.datapipe.delta_index.stream_sink`).
 
     :class:`IvfIndexHandle` unions the delta in at open time, with
-    per-side partition pruning intact (the centroid_id filter pushes
-    through the union).  Codebook drift under a shifting distribution
-    is handled by REBUILDING (the codebook is frozen here — assignment
-    must stay consistent with the base cells or recall silently decays);
-    rebuild-and-swap via TableStore is the compaction story.  Returns a
-    ``DataStreamWriter`` — caller adds trigger/checkpoint and
-    ``.start()``, like the WebDataset streaming export.
+    per-side partition pruning intact.  Codebook drift under a shifting
+    distribution is handled by REBUILDING (assignment must stay
+    consistent with the base cells or recall silently decays).  Returns
+    a ``DataStreamWriter`` — caller adds trigger/checkpoint and
+    ``.start()``.
 
     Epoch identity contract: within ONE checkpoint lineage Spark's
-    epoch ids are monotonic and replay-safe (a replayed crashed batch
-    REPLACES its partial delta; one already folded by an intervening
-    compaction is a no-op via the watermark).  A stream started with a
-    FRESH checkpoint on an index with history restarts ids at 0 and
-    MUST pass ``epoch_offset=next_epoch_offset(path)`` — the offset is
-    fixed for the checkpoint's whole lifetime (reuse the same value on
-    every restart of that checkpoint), which is why it is an explicit
-    KEYWORD-ONLY argument with NO DEFAULT (round-13 hardening: the old
-    ``epoch_offset=0`` default made the one omission whose consequence
-    is silent data loss type-check and run) and not read inside the
-    sink.  Pass an explicit ``0`` for a freshly built index.
+    epoch ids are monotonic and replay-safe (a replayed batch REPLACES
+    its partial delta; one already folded by an intervening compaction
+    is a no-op via the watermark).  A FRESH checkpoint on an index with
+    history restarts ids at 0 and MUST pass
+    ``epoch_offset=next_epoch_offset(path)``, fixed for the
+    checkpoint's whole lifetime — hence keyword-only with NO default
+    (an explicit ``0`` for a freshly built index).
 
     Pass ``checkpoint=`` (instead of setting ``checkpointLocation``
     yourself) to make the contract machine-checked: the offset is
     persisted as ``_ivf_epoch_offset.json`` inside the checkpoint dir
-    on first wiring and validated on every restart, so a fresh lineage
-    colliding with the index's committed epoch frontier — or a restart
-    with a different offset or a different index — raises at wiring
-    time instead of silently losing batches
-    (:func:`_validate_lineage_offset`); the returned writer already
-    carries the ``checkpointLocation`` option.
+    on first wiring and validated on every restart
+    (:func:`pedsnetdcc_spark.util.validate_stream_offset`), and the
+    stream is registered as the index's one live lineage — a later
+    wiring supersedes it, and its next epoch fails with
+    :class:`~pedsnetdcc_spark.util.StreamLineageSuperseded`.
 
-    SELF-BOUNDING INGESTION: pass ``auto_compact_epochs`` /
-    ``auto_compact_fraction`` to run :func:`maybe_compact_ivf_index`
-    after each micro-batch — a never-compacted appender otherwise
-    grows the handle's open-time delta fan-in without bound.  The fold
-    runs between the batch's append lock release and the next batch
-    (its own lock), the ``folded_through_epoch`` watermark keeps any
-    crash-replay across it exactly-once, and the thresholds make it a
-    cheap listing when nothing crossed them."""
-
-    def _append(batch_df: DataFrame, epoch_id: int) -> None:
-        _append_ivf_epoch(batch_df, epoch_id + epoch_offset, path,
-                          live_lineage_checkpoint=checkpoint)
-        if (auto_compact_epochs is not None
-                or auto_compact_fraction is not None):
-            maybe_compact_ivf_index(
-                batch_df.sparkSession, path,
-                max_epochs=auto_compact_epochs,
-                max_delta_fraction=auto_compact_fraction,
-            )
-
-    writer = stream.writeStream.foreachBatch(_append).outputMode("append")
-    if checkpoint is not None:
-        # validate + register under the writer lock so two simultaneous
-        # wirings serialize; registering makes THIS checkpoint the
-        # index's one live append lineage (superseding any previous —
-        # the superseded stream fails loudly at its next batch)
-        from pedsnetdcc_spark.util import (
-            index_writer_lock,
-            register_live_lineage,
-        )
-
-        with index_writer_lock(path, "wire-lineage"):
-            _validate_lineage_offset(path, checkpoint, epoch_offset)
-            register_live_lineage(path, checkpoint)
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    ``auto_compact_epochs`` / ``auto_compact_fraction`` run
+    :func:`maybe_compact_ivf_index` after each micro-batch; the
+    watermark keeps a crash-replay across a fold exactly-once."""
+    return DI.stream_sink(
+        stream, path, _IVF,
+        lambda df, meta: _assign_cells(df, meta, *_load_codebooks(path, meta)),
+        offset=epoch_offset, checkpoint=checkpoint,
+        auto_compact_deltas=auto_compact_epochs,
+        auto_compact_fraction=auto_compact_fraction,
+    )
 
 
 def hyperplane_sketch(vec: Column, bits: int = 8, seed: int = 0, dim: int = 64) -> Column:

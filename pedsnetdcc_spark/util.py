@@ -326,12 +326,12 @@ def validate_stream_offset(
 ) -> None:
     """Persist-and-validate an append stream lineage's id offset next
     to its checkpoint, so a colliding fresh lineage RAISES instead of
-    silently losing batches.  Shared core of the IVF index's
-    ``_validate_lineage_offset`` and the span index's
-    ``_validate_generation_offset`` — a fresh checkpoint restarts
-    Spark's epoch ids at 0, so the offset is part of the lineage's
-    identity for its whole lifetime (same value on every restart, one
-    index per checkpoint for life).
+    silently losing batches.  Called by the persisted indexes' stream
+    sink (:func:`pedsnetdcc_spark.datapipe.delta_index.stream_sink`)
+    at wiring time — a fresh checkpoint restarts Spark's epoch ids at
+    0, so the offset is part of the lineage's identity for its whole
+    lifetime (same value on every restart, one index per checkpoint for
+    life).
 
     First wiring of a checkpoint (no marker): ``offset`` must be at
     least ``required`` (one past the index's committed frontier — an

@@ -28,17 +28,9 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def _cpu_ticks():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
-
-
-def _steal_pct(before, after):
-    ds, dt = after[0] - before[0], after[1] - before[1]
-    return round(100.0 * ds / dt, 3) if dt > 0 else None
+from bench import _cpu_ticks, _steal_pct  # noqa: E402
 
 
 def _arm(query: str, envvar: str, value: str, repo: str):

@@ -19,6 +19,10 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _cpu_ticks, _steal_pct  # noqa: E402
+
 
 def main() -> None:
     names = sys.argv[1:]
@@ -52,17 +56,6 @@ def main() -> None:
     spark.range(64).repartition(64).mapInPandas(_warm_op, "id long") \
         .mapInPandas(_warm_op, "id long").count()
 
-    def _cpu_ticks():
-        # /proc/stat steal capture, same fields as bench.py (r13 §13):
-        # every profile window carries its own throttle note (r13
-        # verdict item 7 — scaling/profile numbers self-adjudicate)
-        try:
-            with open("/proc/stat") as f:
-                vals = [int(x) for x in f.readline().split()[1:]]
-            return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
-        except (OSError, ValueError, IndexError):  # pragma: no cover
-            return None
-
     windows = {}
     steals = {}
     for name in names:
@@ -73,11 +66,10 @@ def main() -> None:
         t0 = time.time() * 1000
         fn(spark, sf_dir).count()          # timed run
         t1 = time.time() * 1000
-        ticks1 = _cpu_ticks()
-        if ticks0 and ticks1 and ticks1[1] > ticks0[1]:
-            steals[name] = round(
-                100.0 * (ticks1[0] - ticks0[0]) / (ticks1[1] - ticks0[1]), 2
-            )
+        # every profile window carries its own /proc/stat steal note
+        steal = _steal_pct(ticks0, _cpu_ticks())
+        if steal is not None:
+            steals[name] = steal
         spark.catalog.clearCache()
         windows[name] = (t0, t1)
     spark.stop()

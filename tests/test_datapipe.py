@@ -3106,7 +3106,7 @@ def test_span_index_racing_appends_fail_loudly(spark, tmp_path, monkeypatch):
     committed non-empty gen=N raises), never silently merge or clobber.
     Simulated by pinning the loser's generation listing to the stale
     pre-race state."""
-    import pedsnetdcc_spark.datapipe.dedup as D
+    import pedsnetdcc_spark.datapipe.delta_index as DI
     from pedsnetdcc_spark.datapipe.dedup import (
         append_span_index,
         build_span_index,
@@ -3120,7 +3120,7 @@ def test_span_index_racing_appends_fail_loudly(spark, tmp_path, monkeypatch):
     # writer A listed generations (none) ... then writer B commits gen=0
     append_span_index(gen, idx)
     # ... writer A proceeds with its stale listing and tries gen=0 too
-    monkeypatch.setattr(D, "_span_index_gens", lambda _path: [])
+    monkeypatch.setattr(DI, "committed_ids", lambda _path, _layout: [])
     with pytest.raises(OSError):
         append_span_index(gen, idx)
 
@@ -3324,6 +3324,135 @@ def test_ivf_crash_matrix(spark, emb, tmp_path, crash_point, next_op):
     cells = open_ivf_index(spark, root).cells
     assert cells.count() == committed, (crash_point, next_op)
     assert cells.select("vec_id").distinct().count() == committed
+
+
+class _InjectedCrash(RuntimeError):
+    """A fault injected into a delta-index rename."""
+
+
+class _CrashingOs:
+    """Stands in for ``os`` inside ``delta_index``: its ``k``-th
+    ``rename``/``replace`` raises before touching the filesystem;
+    everything else is the real module."""
+
+    def __init__(self, k: int):
+        import os
+
+        self._os, self.k, self.calls = os, k, 0
+
+    def __getattr__(self, name):
+        return getattr(self._os, name)
+
+    def _step(self, real, *args):
+        self.calls += 1
+        if self.calls == self.k:
+            raise _InjectedCrash(f"{real.__name__} #{self.k}: {args}")
+        return real(*args)
+
+    def rename(self, *args):
+        return self._step(self._os.rename, *args)
+
+    def replace(self, *args):
+        return self._step(self._os.replace, *args)
+
+
+@pytest.mark.parametrize("family", ["span", "ivf"])
+@pytest.mark.parametrize("crash", ["compact:1", "compact:2", "compact:3",
+                                   "compact:4", "append:1"])
+@pytest.mark.parametrize("next_op", ["read", "append", "compact"])
+def test_delta_index_injected_crash_matrix(spark, emb, tmp_path, monkeypatch,
+                                           family, crash, next_op):
+    """Fault injection into the REAL lifecycle code, both index
+    families: the k-th ``os.rename``/``os.replace`` a compaction
+    performs (1 = watermark commit, 2 = base aside, 3 = delta aside,
+    4 = folded temp lands), or the append commit's rename, raises.  The
+    next operation is a read, a stream restart (replay of the
+    interrupted batch's tag, then a new tag) or a compaction.  The index
+    must then hold the ground truth: span counts equal to a fresh build
+    over the committed documents, every committed IVF vector exactly
+    once.  Unlike the hand-replayed matrices above, a reorder of the
+    real steps (e.g. the watermark written after the swap) fails here."""
+    import pedsnetdcc_spark.datapipe.delta_index as DI
+    from pedsnetdcc_spark.datapipe import dedup as D
+    from pedsnetdcc_spark.datapipe import similarity as S
+
+    path = str(tmp_path / "idx")
+    if family == "span":
+        texts = ["a b c d e f", "a b c d x y", "g h i j k l", "a b c d g h",
+                 "m n o p q r", "g h i j z z"]
+        rows = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+        base, d0, d1, d2 = (rows.where(f"doc_id in ({ids})")
+                            for ids in ("0, 1", "2", "3", "4, 5"))
+
+        def build(df, at=path):
+            D.build_span_index(df, at, "doc_id", k=4)
+
+        def append(df, tag):
+            D.append_span_index(df, path, generation=tag)
+
+        def compact():
+            D.compact_span_index(spark, path)
+
+        def contents(at):
+            return sorted(
+                (r["__key"], r["cnt"])
+                for r in D._span_index_counts(spark, at).collect()
+            )
+    else:
+        vecs = emb.select("vec_id", "embedding")
+        base, d0, d1, d2 = (vecs.where(cond) for cond in (
+            F.col("vec_id") % 5 > 2, F.col("vec_id") % 5 == 0,
+            F.col("vec_id") % 5 == 1, F.col("vec_id") % 5 == 2))
+
+        def build(df, at=path):
+            S.build_ivf_index(df, at, n_centroids=8, assign="flat", seed=3)
+
+        def append(df, tag):
+            S._append_ivf_epoch(df, tag, path)
+
+        def compact():
+            S.compact_ivf_index(spark, path)
+
+        def contents(at):
+            cells = S.open_ivf_index(spark, at).cells.select("vec_id")
+            return sorted(r["vec_id"] for r in cells.collect())
+
+    build(base)
+    append(d0, 0)
+    committed = [base, d0]
+    op, k = crash.split(":")
+    crashing = _CrashingOs(int(k))
+    monkeypatch.setattr(DI, "os", crashing)
+    with pytest.raises(_InjectedCrash):
+        if op == "append":
+            append(d1, 1)
+        else:
+            compact()
+    monkeypatch.undo()
+    assert crashing.calls == int(k)
+
+    if next_op == "append":
+        # a restarted stream replays its interrupted batch under the
+        # same tag, then moves on
+        if op == "append":
+            append(d1, 1)
+            committed.append(d1)
+        else:
+            append(d0, 0)
+        append(d2, 2)
+        committed.append(d2)
+    elif next_op == "compact":
+        compact()
+
+    union = committed[0]
+    for df in committed[1:]:
+        union = union.unionByName(df)
+    if family == "span":
+        build(union, str(tmp_path / "truth"))
+        want = contents(str(tmp_path / "truth"))
+    else:
+        want = sorted(r["vec_id"] for r in union.collect())
+    assert contents(path) == want, (crash, next_op)
 
 
 def test_ivf_epoch_replay_after_compact_is_noop(spark, emb, tmp_path):
