@@ -34,9 +34,11 @@ from pyspark.sql import functions as F
 #: and the cost is per store per batch: AQE never coalesces inside a
 #: micro-batch, so EVERY micro-batch pays, for each stateful operator,
 #: one task and one state-store commit (a delta file plus its checksum
-#: companion, each with a Hadoop ``.crc``, and a forked ``chmod`` /
-#: ``readlink`` per file operation when Hadoop's local filesystem has
-#: no native library) per partition, however little data arrived.
+#: companion, each with a Hadoop ``.crc``, and a forked ``chmod`` per
+#: created file when Hadoop's local filesystem has no native library,
+#: but no forked ``readlink`` per rename, since ``session.build_session``
+#: selects the ``FileSystem``-based checkpoint manager) per partition,
+#: however little data arrived.
 #: So :func:`scoped_stream_shuffle_partitions` sizes a stream to
 #: ``min(8, defaultParallelism)``: never more stores than cores to
 #: commit them in one wave (on a 4-vCPU host the two-operator era

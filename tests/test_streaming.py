@@ -822,3 +822,59 @@ def test_stream_checkpoint_keeps_its_state_partitions(spark, tmp_path, monkeypat
     parts = _run_era_stream(spark, src, whole_out, str(tmp_path / "whole_ckpt"))
     assert set(parts) == {4}
     assert restarted == _emitted_eras(spark, whole_out)
+
+
+def test_stream_resumes_a_filecontext_checkpoint(spark, tmp_path, monkeypatch):
+    """A checkpoint begun under Spark's ``FileContext`` checkpoint
+    manager (set for that start only) resumes under the engine's
+    ``FileSystem``-based default: the on-disk format is the same, so the
+    resumed stream emits exactly the eras of an uninterrupted run, and
+    those are exactly the finalized eras of the Python reference.  No
+    commit leaves a temp file behind."""
+    import datetime as dt
+    import os
+
+    from pedsnetdcc_spark.session import CHECKPOINT_FILE_MANAGER
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    file_context = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    D = dt.datetime
+    span, gap = dt.timedelta(days=1), dt.timedelta(days=7)
+    first = [(u, D(2024, 1, 1 + u % 5)) for u in range(1, 13)]
+    first += [(u, D(2024, 2, 1)) for u in range(1, 13)]
+    second = [(u, D(2024, 2, 6)) for u in range(2, 13, 2)] + [(99, D(2024, 4, 1))]
+
+    def write(events, mode):
+        rows = [(u, ts, ts + span) for u, ts in events]
+        spark.createDataFrame(rows, _ERA_SCHEMA).coalesce(1).write.mode(mode).parquet(src)
+
+    src = str(tmp_path / "src")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    write(first, "error")
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    spark.conf.set(key, file_context)
+    try:
+        _run_era_stream(spark, src, out, ckpt)
+    finally:
+        spark.conf.set(key, CHECKPOINT_FILE_MANAGER)
+    assert _emitted_eras(spark, out)  # the January eras closed in the first run
+
+    write(second, "append")
+    _run_era_stream(spark, src, out, ckpt)
+    resumed = _emitted_eras(spark, out)
+
+    whole_out = str(tmp_path / "whole_out")
+    _run_era_stream(spark, src, whole_out, str(tmp_path / "whole_ckpt"))
+    assert resumed == _emitted_eras(spark, whole_out)
+
+    all_eras, max_ts = _reference_interval_eras(
+        [{"user_id": u, "ts": ts} for u, ts in first + second], span, gap
+    )
+    watermark = max_ts - dt.timedelta(days=5)
+    assert resumed == sorted(er for er in all_eras if er[2] + gap < watermark)
+    leftovers = [f for _, _, fs in os.walk(ckpt) for f in fs if ".tmp" in f]
+    assert not leftovers, leftovers
